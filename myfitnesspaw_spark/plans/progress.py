@@ -38,6 +38,17 @@ Scale notes (100 TB stance):
 - customer and the per-user argmax are tiny → broadcast joins.
 - The start-date filter is applied to orders before the fact join, so
   it pushes down to the parquet scan.
+
+Serving: ``progress_report`` does not run the plan per call.  It
+returns a per-data-version, driver-resident snapshot of the full table
+(``plans.serving``), so a point request
+(``progress_report(...).where(custkey == k)``) is folded by Catalyst
+into the local relation and starts no Spark job.  The snapshot is
+rebuilt when the listing, size or mtime of an input file
+(orders, lineitem, customer, events) changes, or under a new
+SparkContext.  It holds the whole report on the driver:
+O(customers × active days) rows.  The registry name
+``progress_report`` maps to the Catalyst plan, ``progress_plan``.
 """
 
 from __future__ import annotations
@@ -46,10 +57,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myfitnesspaw_spark.functions import money_cents, trunc_long
+from myfitnesspaw_spark.plans import serving
 from myfitnesspaw_spark.sources import load_table
 
 START_DATE = "1996-01-01"
 DEFAULT_WEIGHT = 80.0
+INPUT_TABLES = ("orders", "lineitem", "customer", "events")
 
 
 def progress_report(
@@ -58,6 +71,23 @@ def progress_report(
     start_date: str = START_DATE,
     default_weight: float = DEFAULT_WEIGHT,
 ) -> DataFrame:
+    """The full progress table, served from the per-version snapshot."""
+    return serving.snapshot(
+        spark,
+        ("progress_report", sf_dir, start_date, default_weight),
+        sf_dir,
+        INPUT_TABLES,
+        lambda: progress_plan(spark, sf_dir, start_date, default_weight),
+    )
+
+
+def progress_plan(
+    spark: SparkSession,
+    sf_dir: str,
+    start_date: str = START_DATE,
+    default_weight: float = DEFAULT_WEIGHT,
+) -> DataFrame:
+    """The Catalyst plan of the progress report over the star."""
     orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate").cast("date") >= F.lit(start_date).cast("date")
     )

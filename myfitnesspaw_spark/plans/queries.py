@@ -76,18 +76,18 @@ from myfitnesspaw_spark.plans import (
     text_queries as tq,
     udaf_queries as uq,
 )
-from myfitnesspaw_spark.plans.nutrition import NUTRITION_ORACLE, nutrition_report
+from myfitnesspaw_spark.plans.nutrition import NUTRITION_ORACLE, nutrition_plan
 from myfitnesspaw_spark.plans.progress import (
     CHART_RENDER_ORACLE,
     PROGRESS_ORACLE,
     chart_render_pixels,
-    progress_report,
+    progress_plan,
 )
 from myfitnesspaw_spark.plans.registry import register
 
 # --- Window part 1: permanent canaries (pinned in-window every round
 # --- from round 5 on) - flagship, one streaming path, one dedup path.
-register("progress_report", PROGRESS_ORACLE)(progress_report)
+register("progress_report", PROGRESS_ORACLE)(progress_plan)
 register("streaming_hourly_rollup", sq.STREAMING_ROLLUP_ORACLE)(sq.streaming_rollup)
 register("dedup_clusters", tq.DEDUP_CLUSTERS_ORACLE)(tq.dedup_clusters)
 
@@ -237,7 +237,7 @@ register("snapshot_full_outer_diff", mq.SNAPSHOT_FULL_OUTER_ORACLE)(
     mq.snapshot_full_outer_diff
 )
 register("zorder_code_layout", mq.ZORDER_CODE_ORACLE)(mq.zorder_code_layout)
-register("nutrition_report", NUTRITION_ORACLE)(nutrition_report)
+register("nutrition_report", NUTRITION_ORACLE)(nutrition_plan)
 register("cdc_diff", core_ops.CDC_DIFF_ORACLE)(core_ops.cdc_diff)
 register("upsert_keep_latest", core_ops.UPSERT_ORACLE)(core_ops.upsert_orders)
 register("date_spine_gaps", core_ops.DATE_SPINE_ORACLE)(core_ops.date_spine_gaps)

@@ -246,7 +246,8 @@ def write_index_store(df: DataFrame, path: str) -> None:
     per deployment via conf
     ``spark.myfitnesspaw.store.rebalance=false`` or env
     ``SPARK_GRAFT_STORE_REBALANCE=0``; the knob is read per write so
-    tests can pin both branches."""
+    tests can pin both branches.  Values parse strictly: 1/true/yes/on
+    or 0/false/no/off (any case); anything else raises ValueError."""
     import os as _os
 
     knob = (
@@ -254,8 +255,21 @@ def write_index_store(df: DataFrame, path: str) -> None:
         or _os.environ.get("SPARK_GRAFT_STORE_REBALANCE", "")
         or "true"
     )
-    rebalance = str(knob).lower() not in ("0", "false")
+    rebalance = _parse_bool("spark.myfitnesspaw.store.rebalance", knob)
     (df.hint("rebalance") if rebalance else df).write.mode("overwrite").parquet(path)
+
+
+_TRUE = frozenset({"1", "true", "yes", "on"})
+_FALSE = frozenset({"0", "false", "no", "off"})
+
+
+def _parse_bool(name: str, value: str) -> bool:
+    v = value.strip().lower()
+    if v in _TRUE:
+        return True
+    if v in _FALSE:
+        return False
+    raise ValueError(f"{name}: expected one of {sorted(_TRUE | _FALSE)}, got {value!r}")
 
 
 def read_index_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -298,6 +312,7 @@ def write_bucketed_index_store(
     bucket partitioning (measured r21: the checkpointed form re-gains
     all 4 exchanges the bucketed scan removes).
     """
+    import hashlib as _hashlib
     import re as _re
 
     spark = df.sparkSession
@@ -309,7 +324,10 @@ def write_bucketed_index_store(
     if buckets <= 0:
         write_index_store(df, path)
         return spark.read.schema(df.schema).parquet(path)
-    table = _re.sub(r"[^A-Za-z0-9_]", "_", _basename(path))
+    # The sanitized basename alone collides (sf0.1 vs sf0_1); a short
+    # hash of the full path keeps distinct stores in distinct tables.
+    digest = _hashlib.sha1(path.encode()).hexdigest()[:10]
+    table = _re.sub(r"[^A-Za-z0-9_]", "_", _basename(path)) + "_" + digest
     (
         df.repartition(buckets, bucket_col)
         .write.mode("overwrite")

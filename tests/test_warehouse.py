@@ -659,6 +659,23 @@ def test_index_store_rebalance_knob(spark, tmp_path):
     back = spark.read.schema("id long, v long").parquet(str(tmp_path / "rb"))
     assert back.count() == 10_000
 
+    # Strict parsing: the other spellings pick their branch, and a typo
+    # raises instead of silently picking one.
+    for value, files in (("OFF", 16), ("yes", n_rb)):
+        spark.conf.set("spark.myfitnesspaw.store.rebalance", value)
+        try:
+            out = str(tmp_path / f"knob_{value}")
+            write_index_store(df, out)
+            assert len(glob.glob(os.path.join(out, "part-*"))) == files
+        finally:
+            spark.conf.unset("spark.myfitnesspaw.store.rebalance")
+    spark.conf.set("spark.myfitnesspaw.store.rebalance", "fasle")
+    try:
+        with pytest.raises(ValueError, match="fasle"):
+            write_index_store(df, str(tmp_path / "typo"))
+    finally:
+        spark.conf.unset("spark.myfitnesspaw.store.rebalance")
+
 
 def test_bucketed_index_store_layout_for_the_reader(spark, tmp_path):
     """write_bucketed_index_store returns a scan whose bucket
@@ -694,6 +711,28 @@ def test_bucketed_index_store_layout_for_the_reader(spark, tmp_path):
     assert back2.count() == 10_000
     plan2 = back2.groupBy("doc_id").count()._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan2  # bare parquet carries no partitioning
+
+
+def test_bucketed_index_store_paths_never_share_a_table(spark, tmp_path):
+    """Paths whose basenames sanitize alike (sf0.1, sf0_1) get distinct
+    catalog tables: each store reads back its own rows, from the frame
+    returned by the write and from a fresh catalog lookup."""
+    from myfitnesspaw_spark.sinks.warehouse import write_bucketed_index_store
+
+    def store(lo, hi, name):
+        df = spark.range(lo, hi).select((F.col("id") % 7).alias("doc_id"), F.col("id").alias("v"))
+        return write_bucketed_index_store(df, str(tmp_path / name), "doc_id", buckets=2)
+
+    a = store(0, 100, "sf0.1")
+    b = store(1000, 1050, "sf0_1")
+    assert sorted(r.v for r in a.collect()) == list(range(100))
+    assert sorted(r.v for r in b.collect()) == list(range(1000, 1050))
+    names = [t.name for t in spark.catalog.listTables() if t.name.startswith("sf0_1_")]
+    try:
+        assert sorted(spark.table(n).count() for n in names) == [50, 100]
+    finally:
+        for n in names:
+            spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
 def test_materialize_instance_sized_reliable_knob(spark, tmp_path):
