@@ -193,43 +193,6 @@ def cold_position_advisory(pass2_runs: int, n_timed: int) -> str | None:
     return None
 
 
-def _warn_untracked_artifacts() -> None:
-    """Loudly flag round artifacts not committed to git (VERDICT r7
-    #2: CORRECTNESS/BENCH artifacts sat untracked at round close
-    three rounds running, under-reporting the age and bench gates
-    from a fresh clone).  stderr only — the driver tail-captures
-    stdout and the compact JSON line must stay last and intact."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    try:
-        out = subprocess.run(
-            ["git", "status", "--porcelain"],
-            cwd=repo, capture_output=True, text=True, timeout=10,
-        ).stdout
-    except Exception:
-        return
-    # Shared matcher with scripts/round_close.py's hard gate so the
-    # warning and the gate can never disagree on the artifact set.
-    # Best-effort like the git call above: a missing/moved helper must
-    # not crash the run after all queries have already been timed.
-    try:
-        from scripts._artifacts import is_artifact_line
-    except Exception:
-        return
-
-    flagged = []
-    for line in out.splitlines():
-        if is_artifact_line(line):
-            flagged.append(f"{line[:2].strip() or '??'} {line[3:].strip()}")
-    if flagged:
-        print(
-            "WARNING: round artifacts uncommitted — commit these in the "
-            "round-close commit:\n  " + "\n  ".join(sorted(flagged)),
-            file=sys.stderr, flush=True,
-        )
-
-
 class BenchBook:
     """Per-query bookkeeping for the two-pass bench loop.
 
@@ -557,7 +520,6 @@ def main() -> None:
                 json.dump(full, fh, indent=1, sort_keys=True)
         except OSError:
             pass
-        _warn_untracked_artifacts()
         print(json.dumps(full), flush=True)  # humans / logs
 
         # Compact summary LAST — must fit the driver's ~2000-byte tail

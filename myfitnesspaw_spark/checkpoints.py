@@ -15,6 +15,9 @@ Setting conf ``spark.myfitnesspaw.checkpoint.dir`` (or env
 ``SPARK_GRAFT_CHECKPOINT_DIR``) routes them to a RELIABLE checkpoint:
 blocks go to the given directory (HDFS/object store on a cluster), the
 lineage is equally truncated, and executor loss only re-reads files.
+``session.get_spark`` sets
+``spark.cleaner.referenceTracking.cleanCheckpoints=true``, so those
+files are deleted once the checkpointed frame is garbage-collected.
 That is the documented 100 TB posture for every instance-sized
 barrier; compact-table barriers (signature tables, candidate lists,
 centroid assignments, CC round labels) intentionally stay
@@ -28,6 +31,8 @@ knob's A/B at the K=32 corpus octave).
 from __future__ import annotations
 
 import os
+import warnings
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
@@ -41,19 +46,36 @@ def checkpoint_dir(spark) -> str | None:
     )
 
 
+def _norm_dir(path: str) -> str:
+    if path.startswith("file:"):
+        path = urlparse(path).path
+    return path.rstrip("/") if "://" in path else os.path.abspath(path)
+
+
 def materialize_instance_sized(df: DataFrame) -> DataFrame:
     """Materialization barrier for instance-sized intermediates.
 
     Default: ``localCheckpoint()`` (executor-local, non-fault-tolerant
     — the bench/local posture).  With a reliable checkpoint dir
     configured, uses ``Dataset.checkpoint()`` against it instead; the
-    dir is set on the SparkContext once, on first use.
+    dir is set on the SparkContext once, on first use.  A context whose
+    checkpoint dir was already set elsewhere keeps it (the dir is
+    context-wide, so changing it would move other callers' files) and
+    a warning names both dirs.
     """
     spark = df.sparkSession
     target = checkpoint_dir(spark)
     if not target:
         return df.localCheckpoint()
     sc = spark.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
+    current = sc.getCheckpointDir()
+    if current is None:
         sc.setCheckpointDir(target)
+    # setCheckpointDir writes into a fresh UUID subdirectory of target.
+    elif _norm_dir(current.rstrip("/").rsplit("/", 1)[0]) != _norm_dir(target):
+        warnings.warn(
+            f"SparkContext checkpoint dir is already {current}; "
+            f"checkpointing there, not under the configured {target}",
+            stacklevel=2,
+        )
     return df.checkpoint()

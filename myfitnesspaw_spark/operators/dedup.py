@@ -219,34 +219,7 @@ def prefix_filter_candidates(shingles: DataFrame, id_col: str, threshold: float)
     prefix = ranked.where(
         F.col("__r") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
     )
-    a = prefix.select(
-        F.col(id_col).alias("id_a"),
-        "shingle",
-        F.col("__r").alias("__ra"),
-        F.col("__n").alias("__na"),
-    )
-    b = prefix.select(
-        F.col(id_col).alias("id_b"),
-        "shingle",
-        F.col("__r").alias("__rb"),
-        F.col("__n").alias("__nb"),
-    )
-    len_ok = (
-        F.col("__nb") >= F.floor(F.lit(threshold) * F.col("__na"))
-    ) & (F.col("__na") >= F.floor(F.lit(threshold) * F.col("__nb")))
-    required_overlap = F.floor(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("__na") + F.col("__nb"))
-    )
-    possible_overlap = (
-        F.least(F.col("__na") - F.col("__ra"), F.col("__nb") - F.col("__rb")) + 1
-    )
-    return (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(len_ok & (possible_overlap >= required_overlap))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _prefix_pair_join(prefix, id_col, threshold)
 
 
 def prefix_filter_candidates_arrays(
@@ -278,6 +251,14 @@ def prefix_filter_candidates_arrays(
         (F.col("__p") + 1).alias("__r"),
         "__n",
     )
+    return _prefix_pair_join(pref, id_col, threshold)
+
+
+def _prefix_pair_join(pref: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """The candidate tail both prefix forms share: self-join the
+    ``(id, shingle, __r, __n)`` prefix rows on ``shingle``, keep
+    ``id_a < id_b`` pairs that pass the length and positional bounds,
+    and de-duplicate."""
     a = pref.select(
         F.col(id_col).alias("id_a"),
         "shingle",

@@ -323,9 +323,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression becomes a join-key filter that the optimizer pushes
     # through the self-union, and Union.rewriteConstraints then dies
     # with "key not found: embedding#N" for some exprId layouts
-    # (deterministically reproduced under scripts/warm_probe.py's
-    # session sequence at sf0.1; layout-dependent, so bench/driver
-    # sessions dodge it by luck).  Pinned by
+    # (reproduced deterministically at sf0.1 after a particular
+    # sequence of earlier queries in one session; layout-dependent, so
+    # other session histories dodge it by luck).  Pinned by
     # tests/test_plans.py::test_semantic_dedup_single_quantizer_pass.
     assigned = ivf_coarse_assign(
         corpus, "embedding", cents, out_col="cluster_id"

@@ -5,58 +5,9 @@ pairs the Spark plan with its DuckDB oracle; names and column aliases
 must match exactly between the two (the driver sorts columns by name
 and hash-compares values).
 
-REGISTRATION ORDER IS THE DRIVER-VISIBLE COVERAGE KNOB: the driver's
-correctness run certifies the FIRST 50 registrations, so each round
-rotates the queries that most need a driver-side row to the front.
-
-ROTATION INVARIANT (amended r8, VERDICT r7 #1): no query's latest
-driver-green row may be more than MAX_AGE = 4 rounds old unless it
-sits in the CURRENT window awaiting refresh, and no query may sit
-never-certified outside the window.  scripts/certification_age.py
-enforces the invariant and exits non-zero on violation.
-
-ROUND-21 WINDOW (executing the front pre-committed in the r20
-docstring, applied mechanically via
-``scripts/rotate_window.py 21 --write``):
-
-1. The three PERMANENT canaries (flagship, one streaming path, one
-   dedup path) — pinned so a loader or session regression can never
-   hide behind the rotation.
-2. Round-21 additions land here, in-window on arrival — NONE
-   expected: the registry is growth-frozen at 170 (VERDICT r11 #3;
-   tests/test_bench_book.py asserts <= 191).
-3. The TWENTY-SIX r17-certified queries that turned age 4 entering
-   r21 — exactly the registrations the r20 docstring pre-committed
-   (approx_quantiles_contract through mfp_api_stream_rollup),
-   including the ETL/silver cohort (etl_mealentries_silver,
-   etl_exercises_silver, mfp_api_datasource), the integrity pair
-   (fk_orphan_audit, cascade_delete_consistency), and the sampling
-   leg (stratified_sample, passage_dedup).
-4. The oldest r18-certified queries (age 3 entering r21),
-   oldest-first in prior registration order, filling the remaining
-   21 slots: funnel_conversion through passage_dedup.
-
-ROUND-22 FRONT (pre-committed so the rotation stays mechanical):
-the r18-certified remainder below the window marker — age 4 entering
-r22 — MUST lead the r22 window after the canaries; they are exactly
-the 26 registrations contiguous at the window-end marker
-(fixed_size_sample through unreturned_orders).  After them, the
-r19-certified cohort (age 3 entering r22) fills the remaining 21
-slots oldest-first; its remainder fronts r23, and the r20/r21
-cohorts rotate last.
-
-GROWTH FREEZE (VERDICT r11 #3): the registry is feature-complete at
-170.  MAX_AGE = 4 with 47 effective slots/round is satisfiable only
-while the registry holds at most 3 + 4*47 = 191 queries under the
-conservative recert-every-4-rounds schedule; tests/test_bench_book.py
-asserts ``len(registry) <= 191`` so growth past the bound is a test
-failure, not a surprise violation.  (The exact invariant — age 5 is
-legal in-window — would allow 3 + 5*47 = 238, but the conservative
-bound keeps one full round of slack for a lost round like r10.)
-
-Everything outside the window was driver-certified in r19 or r20
-(age <= 2 entering r21) except the pre-committed r22 front (age 3),
-and stays guarded by tests/test_registry_oracle.py at every sf.
+The registration order is fixed, and the first three entries
+(flagship, one streaming path, one dedup path) are the permanent
+canaries.
 """
 from __future__ import annotations
 
@@ -85,15 +36,9 @@ from myfitnesspaw_spark.plans.progress import (
 )
 from myfitnesspaw_spark.plans.registry import register
 
-# --- Window part 1: permanent canaries (pinned in-window every round
-# --- from round 5 on) - flagship, one streaming path, one dedup path.
 register("progress_report", PROGRESS_ORACLE)(progress_plan)
 register("streaming_hourly_rollup", sq.STREAMING_ROLLUP_ORACLE)(sq.streaming_rollup)
 register("dedup_clusters", tq.DEDUP_CLUSTERS_ORACLE)(tq.dedup_clusters)
-
-# --- Parts 2-4: the r21 rotating window (47 slots) —
-# --- due-for-refresh queries first, then oldest-cohort fill
-# --- (ordering computed by scripts/rotate_window.py 21).
 register("approx_quantiles_contract", oq.APPROX_QUANTILES_ORACLE)(
     oq.approx_quantiles_contract
 )
@@ -171,13 +116,6 @@ register("hll_union_rollup", smp.HLL_UNION_ROLLUP_ORACLE)(smp.hll_union_rollup)
 register("column_profile", mq.COLUMN_PROFILE_ORACLE)(mq.column_profile)
 register("stratified_sample", smp.STRATIFIED_SAMPLE_ORACLE)(smp.stratified_sample)
 register("passage_dedup", smp.PASSAGE_DEDUP_ORACLE)(smp.passage_dedup)
-
-# ---------------------------------------------------------------
-# --- The 50-query driver window ends here.
-# ---------------------------------------------------------------
-
-# --- Below the marker: oldest cohort first, so the r22
-# --- front is contiguous at the window marker.
 register("fixed_size_sample", smp.FIXED_SIZE_SAMPLE_ORACLE)(smp.fixed_size_sample)
 register("fk_orphan_audit", iq.FK_ORPHAN_AUDIT_ORACLE)(iq.fk_orphan_audit)
 register("cascade_delete_consistency", iq.CASCADE_DELETE_ORACLE)(

@@ -38,6 +38,9 @@ def get_spark(app_name: str = "myfitnesspaw_spark", cpus: int | None = None) -> 
         # truncation DuckDB applies.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # Delete reliable-checkpoint files (checkpoints.py) once their
+        # frame is garbage-collected; localCheckpoint is unaffected.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()

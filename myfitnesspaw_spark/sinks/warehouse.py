@@ -220,56 +220,23 @@ def store_path(name: str, sf_dir: str) -> str:
 def write_index_store(df: DataFrame, path: str) -> None:
     """Persist an index/state table (overwrite = the run's snapshot).
 
-    File-count policy (r21, guide §6 "small files hurt twice"):
-    REBALANCE before the write, ON BY DEFAULT — without it the file
-    count is whatever partitioning the upstream compute happened to
-    have, which in local mode tracks the CORE COUNT (``scatter`` fans
-    the corpus to ``defaultParallelism``), and at 100 TB tracks the
-    width of the producing shuffle — thousands of near-empty files
-    whose listing/open overhead every read-back pays.  The hint
-    inserts an AQE-sized exchange (partitions coalesce toward
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), so file
-    sizes track the advisory target at any scale.
+    File-count policy (guide §6 "small files hurt twice"): REBALANCE
+    before the write.  Without it the file count is whatever
+    partitioning the upstream compute happened to have, which in local
+    mode tracks the CORE COUNT (``scatter`` fans the corpus to
+    ``defaultParallelism``), and at 100 TB tracks the width of the
+    producing shuffle — thousands of near-empty files whose listing/open
+    overhead every read-back pays.  The hint inserts an AQE-sized
+    exchange (partitions coalesce toward
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), so file sizes
+    track the advisory target at any scale.
 
-    History of the default (VERDICT r20 #1/#2): r20 measured plain
-    beating rebalance in a per-arm-per-process matrix and defaulted it
-    OFF; the driver's r20 bench then showed the two heaviest
-    store-writing queries running FASTER AT 8 CORES THAN 32 (file
-    count tracked the core count), and the r21 re-measurement found
-    the r20 matrix was confounded by ambient-load drift between arms.
-    Interleaved same-session A/B at sf0.1 (r21): the knob is neutral
-    within rep noise on the full store-backed queries at BOTH 32 and
-    8 cores, while the isolated store-consumer leg of
-    ``indexed_cc_refresh`` reads 2.09 s from a 32-file plain store vs
-    1.34 s from a 4-file rebalanced one (−36%).  Neutral-to-better at
-    bench scale and strictly better at 100 TB ⇒ default ON.  Opt out
-    per deployment via conf
-    ``spark.myfitnesspaw.store.rebalance=false`` or env
-    ``SPARK_GRAFT_STORE_REBALANCE=0``; the knob is read per write so
-    tests can pin both branches.  Values parse strictly: 1/true/yes/on
-    or 0/false/no/off (any case); anything else raises ValueError."""
-    import os as _os
-
-    knob = (
-        df.sparkSession.conf.get("spark.myfitnesspaw.store.rebalance", None)
-        or _os.environ.get("SPARK_GRAFT_STORE_REBALANCE", "")
-        or "true"
-    )
-    rebalance = _parse_bool("spark.myfitnesspaw.store.rebalance", knob)
-    (df.hint("rebalance") if rebalance else df).write.mode("overwrite").parquet(path)
-
-
-_TRUE = frozenset({"1", "true", "yes", "on"})
-_FALSE = frozenset({"0", "false", "no", "off"})
-
-
-def _parse_bool(name: str, value: str) -> bool:
-    v = value.strip().lower()
-    if v in _TRUE:
-        return True
-    if v in _FALSE:
-        return False
-    raise ValueError(f"{name}: expected one of {sorted(_TRUE | _FALSE)}, got {value!r}")
+    Measured at sf0.1 (interleaved same-session A/B): neutral within
+    rep noise on the full store-backed queries at both 32 and 8 cores,
+    while the isolated store-consumer leg of ``indexed_cc_refresh``
+    reads 2.09 s from a 32-file plain store vs 1.34 s from a 4-file
+    rebalanced one (−36%)."""
+    df.hint("rebalance").write.mode("overwrite").parquet(path)
 
 
 def read_index_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -278,7 +245,7 @@ def read_index_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 
 def write_bucketed_index_store(
-    df: DataFrame, path: str, bucket_col: str, buckets: int | None = None
+    df: DataFrame, path: str, bucket_col: str, buckets: int = 8
 ) -> DataFrame:
     """Persist an index table BUCKETED by its primary read key and
     return the bucketed read-back — §6 "layout for the reader"
@@ -297,15 +264,11 @@ def write_bucketed_index_store(
     (upstream partition × bucket), the classic bucketed-small-files
     trap.
 
-    ``buckets`` defaults to conf ``spark.myfitnesspaw.store.buckets``
-    (default 8).  It is a LAYOUT constant of the store, not a
-    core-count echo: a production deployment sizes it so each bucket
-    approaches the AQE advisory partition size at the store's real
-    volume, and the bench default stays fixed across core counts so
-    the driver's 8-core scaling run reads the same layout.
-    ``buckets <= 0`` falls back to the plain (non-catalog) store —
-    the escape hatch for deployments that cannot register session
-    tables, and the in-session A/B toggle the r21 probes used.
+    ``buckets`` is a LAYOUT constant of the store, not a core-count
+    echo: a production deployment sizes it so each bucket approaches
+    the AQE advisory partition size at the store's real volume, and the
+    default stays fixed across core counts so an 8-core run reads the
+    same layout as a 32-core one.
 
     Do NOT ``localCheckpoint`` the returned frame: the checkpoint
     replaces the scan with a LogicalRDD and the planner forgets the
@@ -316,18 +279,11 @@ def write_bucketed_index_store(
     import re as _re
 
     spark = df.sparkSession
-    if buckets is None:
-        buckets = int(
-            spark.conf.get("spark.myfitnesspaw.store.buckets", None)
-            or _os_environ_get("SPARK_GRAFT_STORE_BUCKETS", "8")
-        )
-    if buckets <= 0:
-        write_index_store(df, path)
-        return spark.read.schema(df.schema).parquet(path)
     # The sanitized basename alone collides (sf0.1 vs sf0_1); a short
     # hash of the full path keeps distinct stores in distinct tables.
     digest = _hashlib.sha1(path.encode()).hexdigest()[:10]
-    table = _re.sub(r"[^A-Za-z0-9_]", "_", _basename(path)) + "_" + digest
+    base = _os.path.basename(_os.path.normpath(path))
+    table = _re.sub(r"[^A-Za-z0-9_]", "_", base) + "_" + digest
     (
         df.repartition(buckets, bucket_col)
         .write.mode("overwrite")
@@ -336,15 +292,3 @@ def write_bucketed_index_store(
         .saveAsTable(table)
     )
     return spark.table(table)
-
-
-def _os_environ_get(key: str, default: str) -> str:
-    import os as _os
-
-    return _os.environ.get(key, default)
-
-
-def _basename(path: str) -> str:
-    import os as _os
-
-    return _os.path.basename(_os.path.normpath(path))

@@ -14,11 +14,6 @@ import json
 import os
 import sys
 
-import pytest
-from hypothesis import given as hyp_given
-from hypothesis import settings as hyp_settings
-from hypothesis import strategies as hyp_st
-
 _spec = importlib.util.spec_from_file_location(
     "bench", os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
 )
@@ -225,178 +220,6 @@ def test_gate_ignores_absent_and_falsy_baselines():
     assert not reg and not watch
 
 
-# --- certification_age: pure invariant logic -----------------------------
-
-_ca_spec = importlib.util.spec_from_file_location(
-    "certification_age",
-    os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "scripts",
-        "certification_age.py",
-    ),
-)
-ca = importlib.util.module_from_spec(_ca_spec)
-sys.modules.setdefault("certification_age", ca)
-_ca_spec.loader.exec_module(ca)
-
-
-def test_green_row_requires_every_dimension():
-    assert ca.green_row({"rows_match": True})  # schema/hash keys absent: ok
-    assert ca.green_row({"rows_match": True, "schema_match": True, "hash_match": True})
-    assert not ca.green_row({"rows_match": False})
-    assert not ca.green_row({"rows_match": True, "hash_match": False})
-    assert not ca.green_row({"rows_match": True, "schema_match": False})
-    assert not ca.green_row({"rows_match": True, "err": "boom"})
-    assert not ca.green_row("ok")  # non-dict row
-
-
-def test_classify_violation_boundaries():
-    names = ["in_new", "fresh", "out_never", "out_at_max", "out_over_max"]
-    green = {"out_at_max": 4, "out_over_max": 3, "fresh": 7}
-    rows, never, stale, violations = ca.classify(
-        names, green, current=8, max_age=4, window_size=2
-    )
-    # never-certified IN window is fine; OUT of window violates.
-    assert [r[0] for r in never] == ["out_never"]
-    # age == max_age out-of-window is overflow (front next round)...
-    assert "out_at_max" in [r[0] for r in stale]
-    # ...but only age > max_age (and never) are violations.
-    assert sorted(r[0] for r in violations) == ["out_never", "out_over_max"]
-
-
-def _simulate_rotation(n: int, rounds: range, window: int = 50, canaries: int = 3):
-    """Run the repo's rotation policy (pinned canaries + oldest-first
-    backlog fill; the driver certifies the window each round) and
-    return (worst re-certification age seen, any classify violation).
-    """
-    names = [f"q{i:03d}" for i in range(n)]
-    start = rounds.start
-    latest = {nm: start - 1 for nm in names[:window]}
-    for i, nm in enumerate(names[window:]):
-        latest[nm] = start - 2 - (i % 3)
-    worst_age, violated = 0, False
-    for rnd in rounds:
-        backlog = sorted(
-            (nm for nm in names if nm not in names[:canaries]),
-            key=lambda nm: latest.get(nm, -1),
-        )
-        order = names[:canaries] + backlog
-        _, _, _, violations = ca.classify(
-            order, latest, current=rnd, max_age=4, window_size=window
-        )
-        violated = violated or bool(violations)
-        for nm in order[:window]:
-            worst_age = max(worst_age, rnd - latest[nm])
-            latest[nm] = rnd
-    return worst_age, violated
-
-
-def test_rotation_cycle_sustains_max_age_four():
-    """Simulate the repo's actual rotation policy over 8 rounds.  At
-    the CURRENT size (153) the STRONG freshness property holds: every
-    query is re-certified within MAX_AGE=4 rounds and classify() never
-    flags a violation (the r7 verdict proved MAX_AGE=3 arithmetically
-    unsatisfiable at this size).  One query past the growth ceiling
-    (3 + 4*47 = 191), the strong property must break — the oldest
-    query only re-certifies at age 5.  (classify()'s EXIT invariant is
-    deliberately weaker — in-window staleness never violates — so a
-    perfect rotation keeps the script green right up to the point the
-    window can no longer absorb the overflow.)"""
-    worst, violated = _simulate_rotation(153, range(8, 16))
-    assert worst <= 4 and not violated, (worst, violated)
-    worst_over, _ = _simulate_rotation(192, range(8, 24))
-    assert worst_over > 4, worst_over
-
-
-def test_real_policy_forward_satisfiable_from_committed_state():
-    """Drive the MECHANIZED policy (scripts/rotate_window.py — the one
-    --write actually applies, unlike the ad-hoc model above) forward
-    20 rounds from the repo's ACTUAL committed state: the live
-    registration order plus the real CORRECTNESS history.  Every
-    round must compute without RotationUnsatisfiable, produce an
-    order classify() never flags, remain a fixed point of its own
-    recomputation (the property the round-aware --check relies on),
-    and re-certify every query within MAX_AGE.  The rotation
-    arithmetic is zero-slack at 170 registered, so any drift in the
-    committed state that would wedge a FUTURE round fails here,
-    this round."""
-    text = open(rw.QUERIES_PY).read()
-    _, _, order = rw.parse_blocks(text)
-    latest = rw.latest_green_rounds()
-    start = rw.newest_round() + 1
-    worst_age = 0
-    for rnd in range(start, start + 20):
-        order = rw.compute_rotation(order, latest, rnd)  # must not raise
-        # fixed point: recomputing with the rotated order as prior
-        # returns it unchanged (match_live_order's acceptance basis)
-        assert rw.compute_rotation(order, latest, rnd) == order
-        _, _, _, violations = ca.classify(order, latest, current=rnd)
-        assert not violations, (rnd, violations[:3])
-        for nm in order[:rw.WINDOW]:
-            if nm in latest:
-                worst_age = max(worst_age, rnd - latest[nm])
-            latest[nm] = rnd
-    assert worst_age <= rw.MAX_AGE + 1, worst_age
-
-
-@hyp_given(
-    hyp_st.integers(4, 191).flatmap(
-        lambda n: hyp_st.tuples(
-            hyp_st.just(n),
-            hyp_st.lists(
-                # -1 encodes never-certified; 0..5 an age entering the
-                # first simulated round (5 = already past MAX_AGE).
-                hyp_st.integers(-1, 5), min_size=n - 3, max_size=n - 3
-            ),
-        )
-    )
-)
-@hyp_settings(max_examples=60, deadline=None)
-def test_policy_random_states_never_silently_violate(case):
-    """Safety property of the mechanized policy over RANDOM
-    certification states (real constants: window 50 / max_age 4):
-    compute_rotation either (a) raises RotationUnsatisfiable, and only
-    when the due set genuinely exceeds the 47 slots — a doomed state
-    refused loudly, never truncated — or (b) returns a canary-pinned
-    permutation of the registry that classify() finds violation-free,
-    and continues to do so for every subsequent round once the window
-    is certified.  Deterministic tests cover the committed state and
-    the steady-state cycle; this covers the state space between."""
-    n, raw_ages = case
-    start = 10
-    canaries = ["c0", "c1", "c2"]
-    names = canaries + [f"q{i:03d}" for i in range(n - 3)]
-    latest = {nm: start - 1 for nm in canaries}
-    for nm, a in zip(names[3:], raw_ages):
-        if a >= 0:
-            latest[nm] = start - a
-    order = list(names)
-    for rnd in range(start, start + 8):
-        try:
-            order = rw.compute_rotation(
-                order, latest, rnd, canaries=canaries
-            )
-        except rw.RotationUnsatisfiable:
-            due = [
-                nm for nm in order[3:]
-                if nm not in latest or rnd - latest[nm] >= 4
-            ]
-            # Refusal must be genuine (a doomed state — e.g. a
-            # same-age cohort wider than the 47 fill slots — can
-            # surface after several successful rounds, so refusal is
-            # legal at ANY round; what is never legal is refusing
-            # when the due set actually fits).
-            assert len(due) > 47, (rnd, len(due))
-            return
-        assert order[:3] == canaries
-        assert sorted(order) == sorted(names)
-        _, _, _, violations = ca.classify(
-            order, latest, current=rnd, max_age=4, window_size=50
-        )
-        assert not violations, (rnd, violations[:3])
-        for nm in order[:50]:
-            latest[nm] = rnd
-
-
 def test_permanent_canaries_lead_the_registry():
     """The three permanent canaries (flagship, one streaming path, one
     dedup path) must be the first three registrations EVERY round — a
@@ -411,53 +234,6 @@ def test_permanent_canaries_lead_the_registry():
         "streaming_hourly_rollup",
         "dedup_clusters",
     ]
-
-
-def test_registry_growth_freeze_bound():
-    """GROWTH FREEZE (VERDICT r11 #3): MAX_AGE=4 with 47 effective
-    slots/round is satisfiable only up to 3 + 4*47 = 191 registered
-    queries (conservative recert-every-4-rounds schedule; the exact
-    invariant would allow 238 but keeps no slack for a lost round).
-    Registry growth past the bound must be a TEST failure decided by
-    editing this bound alongside the rotation constants, never a
-    surprise certification violation three rounds later."""
-    from myfitnesspaw_spark.plans import registry
-    import myfitnesspaw_spark.plans.queries  # noqa: F401  (populates registry)
-
-    ceiling = 3 + ca.MAX_AGE * (ca.WINDOW - 3)
-    assert ceiling == 191
-    n = len(list(registry.queries()))
-    assert n <= ceiling, (
-        f"registry has {n} queries, past the {ceiling} rotation ceiling: "
-        "raise MAX_AGE or retire queries before registering more"
-    )
-
-
-# --- shared round-artifact matcher ---------------------------------------
-
-_art_spec = importlib.util.spec_from_file_location(
-    "_artifacts",
-    os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "scripts", "_artifacts.py"
-    ),
-)
-art = importlib.util.module_from_spec(_art_spec)
-_art_spec.loader.exec_module(art)
-
-
-def test_artifact_matcher_covers_renames_and_quotes():
-    assert art.is_artifact_line("?? BENCH_r08.json")
-    assert art.is_artifact_line(" M bench_full.json")
-    assert art.is_artifact_line("M  BASELINE_BENCH.json")
-    # A renamed-but-uncommitted artifact matches on EITHER side.
-    assert art.is_artifact_line("R  BENCH_r8.json -> BENCH_r8_final.json")
-    assert art.is_artifact_line("R  notes.txt -> CORRECTNESS_r09.json")
-    # Quoted path (git quotes special characters).
-    assert art.is_artifact_line('?? "bench_full.json"')
-    # Non-artifacts do not match; $-anchored so suffixed names don't.
-    assert not art.is_artifact_line("?? scripts/round_close.py")
-    assert not art.is_artifact_line(" M bench_full.json.bak")
-    assert not art.is_artifact_line("?? myBENCH_notes.md")
 
 
 def test_compact_bench_line_fits_driver_tail_capture():
@@ -491,217 +267,6 @@ def test_compact_bench_line_fits_driver_tail_capture():
         }
     )
     assert len(line) < 1900, (len(line), "compact bench line over budget")
-
-
-# --- rotate_window: mechanical rotation policy ---------------------------
-
-_rw_spec = importlib.util.spec_from_file_location(
-    "rotate_window",
-    os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "scripts",
-        "rotate_window.py",
-    ),
-)
-rw = importlib.util.module_from_spec(_rw_spec)
-sys.modules.setdefault("rotate_window", rw)
-_rw_spec.loader.exec_module(rw)
-
-
-def test_compute_rotation_policy():
-    """The pure ordering policy scripts/rotate_window.py mechanizes:
-    canaries pinned, due set (age >= MAX_AGE or never certified)
-    fronts the window in prior order, oldest-first fill, below-marker
-    remainder oldest-cohort-first so the next front is contiguous."""
-    canaries = ["c1", "c2", "c3"]
-    # 3 canaries + 9 rotating names across three cohorts, window 7
-    # (4 rotating slots), max_age 2.
-    order = canaries + [f"a{i}" for i in range(3)] + [
-        f"b{i}" for i in range(3)
-    ] + [f"n{i}" for i in range(3)]
-    latest = {n: 8 for n in canaries}
-    latest.update({f"a{i}": 6 for i in range(3)})  # age 2 -> due
-    latest.update({f"b{i}": 7 for i in range(3)})  # age 1 -> fill pool
-    # n* certified this very round (age 0): rotate last.
-    latest.update({f"n{i}": 8 for i in range(3)})
-
-    got = rw.compute_rotation(
-        order, latest, current=8, canaries=canaries, max_age=2, window=7
-    )
-    # due a* front the window (prior order), oldest fresh b0 fills the
-    # 4th slot, then below-marker: b1 b2 (age 1) before n* (age 0).
-    assert got == canaries + ["a0", "a1", "a2", "b0", "b1", "b2",
-                              "n0", "n1", "n2"]
-
-    # A never-certified query is infinitely old: it must front the due
-    # set's cohort ordering (prior order among the due).
-    latest2 = dict(latest)
-    del latest2["a1"]
-    got2 = rw.compute_rotation(
-        order, latest2, current=8, canaries=canaries, max_age=2, window=7
-    )
-    assert got2[:7] == canaries + ["a0", "a1", "a2", "b0"]
-
-    # Overfull due set is a clean, typed failure — the invariant is
-    # already lost, not silently truncated.
-    latest3 = {n: 8 for n in canaries}
-    latest3.update({n: 1 for n in order[3:]})  # everything age 7
-    with pytest.raises(rw.RotationUnsatisfiable):
-        rw.compute_rotation(
-            order, latest3, current=8, canaries=canaries, max_age=2, window=7
-        )
-
-
-def test_match_live_order_accepts_both_cycle_states(monkeypatch):
-    """Synthetic coverage of BOTH acceptance branches of
-    ``match_live_order`` — the live test below only ever exercises
-    whichever state the repo happens to be in, so a refactor breaking
-    one branch would go unnoticed until the round cycle reaches it.
-
-    Cycle states, for newest CORRECTNESS artifact = round 8:
-    (a) rotation for r9 freshly applied (between rotation and the
-        next driver run) -> matched round 9;
-    (b) order still the r8 rotation, recomputed from the artifacts
-        that existed at ITS apply time (rounds <= 7 — the newest
-        artifact must be excluded or the due set collapses and the
-        recomputation diverges) -> matched round 8;
-    (c) anything else -> None."""
-    canaries = ["c1", "c2", "c3"]
-    order = canaries + [f"a{i}" for i in range(3)] + [
-        f"b{i}" for i in range(3)
-    ] + [f"n{i}" for i in range(3)]
-
-    # Per-round green history (max_age 2, window 9 -> 6 rotating
-    # slots): a* certified r5 only, b* r7, n* r6 AND r8, canaries
-    # every round.  At r8 apply time (artifacts <= 7) the due set is
-    # a* (age 3) + n* (latest 6, age 2) = 6 = slots, below = b*; at
-    # r9 (artifacts <= 8) it is a* (age 4) + b* (age 2), below = n*.
-    # The two rotations therefore differ, so acceptance of each is a
-    # real branch, not a coincidence.
-    history = {n: [5, 6, 7, 8] for n in canaries}
-    history.update({f"a{i}": [5] for i in range(3)})
-    history.update({f"b{i}": [7] for i in range(3)})
-    history.update({f"n{i}": [6, 8] for i in range(3)})
-
-    def fake_latest(upto=None):
-        return {
-            n: max(r for r in rounds if upto is None or r <= upto)
-            for n, rounds in history.items()
-            if any(upto is None or r <= upto for r in rounds)
-        }
-
-    monkeypatch.setattr(rw, "newest_round", lambda: 8)
-    monkeypatch.setattr(rw, "latest_green_rounds", fake_latest)
-    monkeypatch.setattr(rw, "CANARIES", canaries)
-    monkeypatch.setattr(rw, "MAX_AGE", 2)
-    monkeypatch.setattr(rw, "WINDOW", 9)
-
-    r9_order = rw.compute_rotation(
-        order, fake_latest(upto=8), 9, canaries=canaries, max_age=2,
-        window=9,
-    )
-    r8_order = rw.compute_rotation(
-        order, fake_latest(upto=7), 8, canaries=canaries, max_age=2,
-        window=9,
-    )
-    assert r8_order != r9_order  # the test is vacuous if they agree
-
-    assert rw.match_live_order(r9_order) == 9   # state (a)
-    assert rw.match_live_order(r8_order) == 8   # state (b)
-    garbled = canaries + list(reversed(order[3:]))
-    assert garbled not in (r8_order, r9_order)
-    assert rw.match_live_order(garbled) is None  # state (c)
-
-
-def test_live_registry_order_is_the_computed_rotation():
-    """The committed plans/queries.py order must BE a rotation the
-    policy computes — a botched hand rotation fails here, this round,
-    instead of as a next-round invariant violation.  ROUND-AWARE
-    (VERDICT r14 #1): the live order is legitimate both freshly
-    rotated for the round in flight (newest CORRECTNESS round + 1)
-    AND between the driver dropping CORRECTNESS_rN and the r{N+1}
-    rotation (the order the newest artifact certified, recomputed
-    from the artifacts that existed at its rotation time) — the
-    strict next-round-only form was red at every judging point by
-    construction.  Also re-checks the parse: blocks round-trip to
-    exactly the registry's registration order."""
-    from myfitnesspaw_spark.plans import registry
-
-    text = open(rw.QUERIES_PY).read()
-    _, blocks, order = rw.parse_blocks(text)
-    assert order == list(registry.queries())
-    assert set(blocks) == set(order)
-
-    matched = rw.match_live_order(order)
-    assert matched is not None, (
-        "live registry order matches neither the freshly-applied "
-        f"r{rw.newest_round() + 1} rotation nor the r{rw.newest_round()} "
-        "order the newest artifact certified — run "
-        "scripts/rotate_window.py <round> --write"
-    )
-
-
-def test_rotate_window_render_roundtrip():
-    """--write safety: rendering a new order and re-parsing must give
-    back exactly that order with every registration block intact, the
-    window marker at the 50-boundary, and an import-clean module
-    (compile check) — proven here so the first real --write (r15)
-    cannot silently drop or duplicate a registration."""
-    text = open(rw.QUERIES_PY).read()
-    header, blocks, order = rw.parse_blocks(text)
-
-    # a deliberately different (reversed rotating section) order
-    new_order = order[:3] + list(reversed(order[3:]))
-    rendered = rw.render(header, blocks, new_order, current=99)
-
-    h2, blocks2, order2 = rw.parse_blocks(rendered)
-    assert order2 == new_order
-    assert blocks2 == {n: blocks[n] for n in order}
-    assert h2 == header
-    # marker sits between registration #50 and #51
-    before_marker = rendered.split(rw.WINDOW_MARKER)[0]
-    assert before_marker.count('register("') == 50
-    compile(rendered, rw.QUERIES_PY, "exec")
-
-
-# --- warm_probe: steady-state guard ---------------------------------------
-
-_wp_spec = importlib.util.spec_from_file_location(
-    "warm_probe",
-    os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "scripts",
-        "warm_probe.py",
-    ),
-)
-wp = importlib.util.module_from_spec(_wp_spec)
-sys.modules.setdefault("warm_probe", wp)
-_wp_spec.loader.exec_module(wp)
-
-
-def test_monotone_falling_flags_converging_runs_only():
-    """The r19 steady-state rule, widened per ADVICE r19: a probe
-    whose best is its FINAL, still-improving rep has not converged and
-    that best must not feed the floor-quality re-anchor bar — whether
-    the series is fully monotone (the forward_fill_gauge incident) or
-    had an early tie/rebound with a tail still falling into a last-rep
-    strict minimum.  A flattened tail, an interior minimum, or a
-    plateau is steady; zero/one rep can never certify steady state."""
-    # the r19 incident: every rep beat the previous one
-    assert wp.monotone_falling([1.092, 0.941, 0.822, 0.701, 0.583])
-    # ADVICE r19: early tie, tail still falling into a last-rep min
-    assert wp.monotone_falling([1.0, 1.0, 0.8, 0.6])
-    # early rebound, but the last rep still beats every earlier one
-    assert wp.monotone_falling([1.0, 0.8, 0.9, 0.7])
-    # flattened tail: last rep did not improve -> steady
-    assert not wp.monotone_falling([1.092, 0.941, 0.822, 0.583, 0.583])
-    # last rep ties an EARLIER minimum -> the best reproduced, steady
-    assert not wp.monotone_falling([1.0, 0.6, 0.8, 0.6])
-    # rebound mid-run -> steady enough (min is interior, not last)
-    assert not wp.monotone_falling([1.0, 0.6, 0.7, 0.65])
-    # plateau -> steady
-    assert not wp.monotone_falling([0.5, 0.5, 0.5])
-    # degenerate rep counts cannot certify steady state
-    assert wp.monotone_falling([0.5])
-    assert wp.monotone_falling([])
 
 
 def test_cold_position_advisory_fires_only_on_starved_pass2():

@@ -626,14 +626,11 @@ def test_store_path_gc_handles_pid_reuse(tmp_path, caplog):
             shutil.rmtree(d, True)
 
 
-def test_index_store_rebalance_knob(spark, tmp_path):
-    """write_index_store coalesces output files BY DEFAULT (r21,
-    VERDICT r20 #1/#2: the driver's 32-core bench showed the plain
-    default regressing the store-backed refresh queries — file count
-    tracked the core count — and the r20 "plain wins" A/B was
-    drift-confounded; rebalance re-measured neutral-or-better
-    interleaved at both 32 and 8 cores).  Opting OUT pins the plain
-    branch; the knob is read per write."""
+def test_index_store_coalesces_files(spark, tmp_path):
+    """write_index_store coalesces output files: the rebalance hint
+    inserts an AQE-sized exchange, so the file count no longer tracks
+    the upstream partitioning (which in local mode tracks the core
+    count)."""
     import glob
     import os
 
@@ -641,48 +638,20 @@ def test_index_store_rebalance_knob(spark, tmp_path):
 
     df = spark.range(0, 10_000, 1, 16).withColumn("v", F.col("id") * 2)
 
-    spark.conf.set("spark.myfitnesspaw.store.rebalance", "false")
-    try:
-        plain = str(tmp_path / "plain")
-        write_index_store(df, plain)
-        n_plain = len(glob.glob(os.path.join(plain, "part-*")))
-        assert n_plain == 16  # opt-out: upstream partitioning passes through
-    finally:
-        spark.conf.unset("spark.myfitnesspaw.store.rebalance")
-
     rb = str(tmp_path / "rb")
-    write_index_store(df, rb)  # default: AQE-sized rebalance exchange
+    write_index_store(df, rb)
     n_rb = len(glob.glob(os.path.join(rb, "part-*")))
-    assert n_rb < n_plain  # file count no longer tracks upstream width
+    assert n_rb < 16  # file count no longer tracks upstream width
 
-    # Both layouts hold identical rows.
-    back = spark.read.schema("id long, v long").parquet(str(tmp_path / "rb"))
+    back = spark.read.schema("id long, v long").parquet(rb)
     assert back.count() == 10_000
-
-    # Strict parsing: the other spellings pick their branch, and a typo
-    # raises instead of silently picking one.
-    for value, files in (("OFF", 16), ("yes", n_rb)):
-        spark.conf.set("spark.myfitnesspaw.store.rebalance", value)
-        try:
-            out = str(tmp_path / f"knob_{value}")
-            write_index_store(df, out)
-            assert len(glob.glob(os.path.join(out, "part-*"))) == files
-        finally:
-            spark.conf.unset("spark.myfitnesspaw.store.rebalance")
-    spark.conf.set("spark.myfitnesspaw.store.rebalance", "fasle")
-    try:
-        with pytest.raises(ValueError, match="fasle"):
-            write_index_store(df, str(tmp_path / "typo"))
-    finally:
-        spark.conf.unset("spark.myfitnesspaw.store.rebalance")
 
 
 def test_bucketed_index_store_layout_for_the_reader(spark, tmp_path):
     """write_bucketed_index_store returns a scan whose bucket
     partitioning feeds doc-keyed consumers with NO exchange (r21,
-    VERDICT r20 #3 / guide §6 layout-for-the-reader), and holds the
-    same rows as a plain store.  buckets<=0 falls back to the plain
-    parquet path."""
+    VERDICT r20 #3 / guide §6 layout-for-the-reader), and holds every
+    row written."""
     import glob
     import os
 
@@ -704,13 +673,6 @@ def test_bucketed_index_store_layout_for_the_reader(spark, tmp_path):
         back.groupBy("doc_id").count()._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in agg_plan
-
-    # fallback: buckets<=0 writes the plain store (no catalog table)
-    p2 = str(tmp_path / "plainfb")
-    back2 = write_bucketed_index_store(df, p2, "doc_id", buckets=0)
-    assert back2.count() == 10_000
-    plan2 = back2.groupBy("doc_id").count()._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan2  # bare parquet carries no partitioning
 
 
 def test_bucketed_index_store_paths_never_share_a_table(spark, tmp_path):
@@ -740,8 +702,10 @@ def test_materialize_instance_sized_reliable_knob(spark, tmp_path):
     routes to a RELIABLE checkpoint dir when the posture knob is set
     (r21, VERDICT r20 #5): same rows either way; the reliable branch
     writes recovery files under the configured dir instead of pinning
-    executor-local blocks."""
+    executor-local blocks.  A second, different configured dir warns,
+    and the session cleans checkpoint files up."""
     import os
+    import warnings
 
     from myfitnesspaw_spark.checkpoints import materialize_instance_sized
 
@@ -762,5 +726,19 @@ def test_materialize_instance_sized_reliable_knob(spark, tmp_path):
         # recovery files actually landed under the configured dir
         found = [f for _, _, fs in os.walk(ckdir) for f in fs]
         assert found, "reliable checkpoint wrote no files"
+
+        # the same dir again is silent ...
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert materialize_instance_sized(df).count() == 1000
+        assert not [w for w in caught if "checkpoint dir" in str(w.message)]
+        # ... a different one warns and keeps the context's dir
+        other = str(tmp_path / "other_ck")
+        spark.conf.set("spark.myfitnesspaw.checkpoint.dir", other)
+        with pytest.warns(UserWarning, match="other_ck"):
+            assert materialize_instance_sized(df).count() == 1000
+        assert not os.path.exists(other)
     finally:
         spark.conf.unset("spark.myfitnesspaw.checkpoint.dir")
+    # get_spark turns on cleanup of reliable-checkpoint files
+    assert spark.conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
