@@ -780,38 +780,6 @@ def simhash_pairs(
     )
 
 
-class _loop_shuffle_partitions:
-    """Size ``spark.sql.shuffle.partitions`` to the ITERATIVE graph for
-    the duration of a CC loop, restoring the prior value on exit.
-
-    The contracted edge set is orders of magnitude smaller than the
-    corpus the pairs came from (47 edges at sf0.1 vs 5000 docs), yet
-    every loop round pays 3-4 shuffles at the corpus-sized partition
-    count — per-task scheduling overhead dominates the rounds.  Target
-    one partition per ~50k edges, clamped to [4, current]: big graphs
-    keep the cluster-sized spread, small graphs stop paying 32 empty
-    tasks per shuffle per round.  Same state-volume-not-core-count
-    policy as streaming/rollup.py::state_shuffle_partitions.
-    """
-
-    def __init__(self, spark, n_edges: int):
-        self.spark = spark
-        self.prior = spark.conf.get("spark.sql.shuffle.partitions", None)
-        cur = int(self.prior or spark.sparkContext.defaultParallelism)
-        self.target = max(4, min(cur, n_edges // 50_000 + 4))
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.target))
-        return self
-
-    def __exit__(self, *exc):
-        if self.prior is None:
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prior)
-        return False
-
-
 def connected_components(
     edges: DataFrame,
     id_a: str = "id_a",
@@ -837,54 +805,56 @@ def connected_components(
     diff materialization).  Returns ``(node, cluster)`` with cluster =
     min reachable node id.
 
-    r20 optimization: the edge count and the per-round convergence sum
-    ride the SAME job as their localCheckpoint via ``observe`` —
-    CollectMetrics fires during the checkpoint materialization, so the
-    loop runs ONE job per round instead of two (and the edge count
-    costs no extra job).  One fewer driver round-trip per iteration is
-    pure latency at any scale; the metric values are identical to the
-    separate aggregates they replace.
+    r20 optimization: the per-round convergence sum rides the SAME job
+    as the round's localCheckpoint via ``observe`` — CollectMetrics
+    fires during the checkpoint materialization, so the loop runs ONE
+    job per round instead of two.  One fewer driver round-trip per
+    iteration is pure latency at any scale; the metric value is
+    identical to the separate aggregate it replaces.
+
+    The rounds run at the session's ``spark.sql.shuffle.partitions``;
+    AQE partition coalescing (on in ``session.get_spark``) shrinks the
+    shuffles of a small graph.  Query code never changes session conf:
+    other threads of the same session read it.
     """
     # ONE materialization of the (possibly expensive) upstream pair
     # detection BEFORE the symmetrize union: a union of two selects
     # over an unmaterialized plan executes that plan once per branch —
     # checkpointing the union instead of the edges ran the whole
     # upstream detection twice.
-    e_obs = Observation()
-    edges = edges.observe(e_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    edges = edges.localCheckpoint()
     sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    with _loop_shuffle_partitions(edges.sparkSession, e_obs.get["n"]):
-        labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-            "lbl", F.col("node")
+    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
+        "lbl", F.col("node")
+    )
+    prev_sum: int | None = None
+    rounds = 0
+    for _ in range(max_iter):
+        rounds += 1
+        nbr = (
+            sym.join(labels, sym.src == labels.node)
+            .groupBy("dst")
+            .agg(F.min("lbl").alias("nlbl"))
         )
-        prev_sum: int | None = None
-        rounds = 0
-        for _ in range(max_iter):
-            rounds += 1
-            nbr = (
-                sym.join(labels, sym.src == labels.node)
-                .groupBy("dst")
-                .agg(F.min("lbl").alias("nlbl"))
+        # Labels only ever decrease, so Σlbl is a convergence
+        # witness — one scalar aggregate instead of a join-diff,
+        # observed inside the checkpoint job itself.
+        ob = Observation()
+        labels = (
+            labels.join(nbr, labels.node == nbr.dst, "left")
+            .select(
+                "node",
+                F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
             )
-            # Labels only ever decrease, so Σlbl is a convergence
-            # witness — one scalar aggregate instead of a join-diff,
-            # observed inside the checkpoint job itself.
-            ob = Observation()
-            labels = (
-                labels.join(nbr, labels.node == nbr.dst, "left")
-                .select(
-                    "node",
-                    F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
-                )
-                .observe(ob, F.sum("lbl").alias("s"))
-                .localCheckpoint()
-            )
-            cur_sum = ob.get["s"]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+            .observe(ob, F.sum("lbl").alias("s"))
+            .localCheckpoint()
+        )
+        cur_sum = ob.get["s"]
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
     if stats is not None:
         stats["rounds"] = rounds
     return labels.select("node", F.col("lbl").alias("cluster"))
@@ -925,7 +895,6 @@ def connected_components_star(
     Returns ``(node, cluster)`` with cluster = min reachable node id,
     exactly :func:`connected_components`'s contract.
     """
-    e_obs = Observation()
     e = (
         edges.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
@@ -933,13 +902,8 @@ def connected_components_star(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .observe(e_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    spark = edges.sparkSession
-    # Edge count rides the checkpoint job via observe (r20): no
-    # separate count() job.
-    n_edges = e_obs.get["n"]
 
     def _large_star(d: DataFrame) -> DataFrame:
         sym = d.union(d.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -967,32 +931,31 @@ def connected_components_star(
     prev: tuple | None = None
     rounds = 0
     converged = False
-    with _loop_shuffle_partitions(spark, n_edges):
-        for _ in range(max_iter):
-            # Fixed-point witness: count + endpoint sums + an order-
-            # insensitive content hash of the edge multiset — one
-            # scalar aggregate per round, no join-diff materialization,
-            # observed inside the checkpoint job itself (r20: one job
-            # per round instead of two).
-            ob = Observation()
-            e = (
-                _small_star(_large_star(e))
-                .observe(
-                    ob,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("u").alias("su"),
-                    F.sum("v").alias("sv"),
-                    F.sum(F.hash("u", "v").cast("long")).alias("sh"),
-                )
-                .localCheckpoint()
+    for _ in range(max_iter):
+        # Fixed-point witness: count + endpoint sums + an order-
+        # insensitive content hash of the edge multiset — one
+        # scalar aggregate per round, no join-diff materialization,
+        # observed inside the checkpoint job itself (r20: one job
+        # per round instead of two).
+        ob = Observation()
+        e = (
+            _small_star(_large_star(e))
+            .observe(
+                ob,
+                F.count(F.lit(1)).alias("n"),
+                F.sum("u").alias("su"),
+                F.sum("v").alias("sv"),
+                F.sum(F.hash("u", "v").cast("long")).alias("sh"),
             )
-            rounds += 1
-            m = ob.get
-            cur = (m["n"], m["su"], m["sv"], m["sh"])
-            if cur == prev:
-                converged = True
-                break
-            prev = cur
+            .localCheckpoint()
+        )
+        rounds += 1
+        m = ob.get
+        cur = (m["n"], m["su"], m["sv"], m["sh"])
+        if cur == prev:
+            converged = True
+            break
+        prev = cur
     if not converged:
         # Exhausting max_iter without the witness matching means the
         # final labels may not be component minima; say so instead of

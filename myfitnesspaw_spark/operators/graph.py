@@ -46,48 +46,39 @@ def pagerank_integer(
 
     Returns ``(node, deg, rank_units)``.
     """
-    from pyspark.sql import Observation
-
-    from myfitnesspaw_spark.operators.dedup import _loop_shuffle_partitions
-
-    # Materialize the pair-derivation lineage ONCE; the edge count
-    # rides the same checkpoint job via observe (r20: no separate
-    # count() job — CollectMetrics fires during materialization).
-    e_obs = Observation()
-    edges = edges.observe(e_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    # Materialize the pair-derivation lineage ONCE.
+    edges = edges.localCheckpoint()
     sym = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).unionByName(
         edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
     )
-    # Same loop discipline as the CC operators: the rank/edge tables
-    # are orders of magnitude smaller than the corpus the pairs came
-    # from, so the per-round join + sum must not pay a corpus-sized
-    # shuffle-partition count in empty-task scheduling overhead.
-    with _loop_shuffle_partitions(edges.sparkSession, e_obs.get["n"]):
-        deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        nodes = deg.select(F.col("s").alias("node"), "deg").localCheckpoint(
-            eager=False
-        )
-        base = (15 * scale) // 100
-        ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
-        for _ in range(iterations):
-            contrib = ranks.join(
-                sym, ranks["node"] == sym["s"]
-            ).select(F.col("d"), F.expr("rank DIV deg").alias("c"))
-            sums = contrib.groupBy("d").agg(F.sum("c").alias("csum"))
-            ranks = (
-                nodes.join(sums, nodes["node"] == sums["d"], "left")
-                .select(
-                    "node",
-                    "deg",
-                    (
-                        F.lit(base)
-                        + F.expr(
-                            f"({PR_DAMP_NUM} * coalesce(csum, 0L)) DIV {PR_DAMP_DEN}"
-                        )
-                    ).cast("long").alias("rank"),
-                )
-                .localCheckpoint(eager=False)
+    # Same loop discipline as the CC operators: the rounds run at the
+    # session's shuffle-partition count, and AQE coalescing shrinks the
+    # shuffles of the small rank/edge tables.
+    deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+    nodes = deg.select(F.col("s").alias("node"), "deg").localCheckpoint(
+        eager=False
+    )
+    base = (15 * scale) // 100
+    ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
+    for _ in range(iterations):
+        contrib = ranks.join(
+            sym, ranks["node"] == sym["s"]
+        ).select(F.col("d"), F.expr("rank DIV deg").alias("c"))
+        sums = contrib.groupBy("d").agg(F.sum("c").alias("csum"))
+        ranks = (
+            nodes.join(sums, nodes["node"] == sums["d"], "left")
+            .select(
+                "node",
+                "deg",
+                (
+                    F.lit(base)
+                    + F.expr(
+                        f"({PR_DAMP_NUM} * coalesce(csum, 0L)) DIV {PR_DAMP_DEN}"
+                    )
+                ).cast("long").alias("rank"),
             )
+            .localCheckpoint(eager=False)
+        )
     return ranks.select("node", "deg", F.col("rank").alias("rank_units"))
 
 

@@ -30,22 +30,29 @@ segment are filters on grouping keys of ``nutrition_daily``, so
 Catalyst pushes them below both aggregations into the orders and
 customer scans.
 
-Serving: ``nutrition_report`` does not run the plan per call.  It
-filters a per-data-version, driver-resident snapshot of
-``nutrition_daily`` — every (custkey, date, c_mktsegment) row, stored
-in (custkey, date) order — by date range and segment (``plans.serving``);
-Catalyst folds that filter into the local relation, so a request starts
-no Spark job, and the filter keeps the stored order, so no sort runs
-either.  The snapshot is rebuilt when the listing, size or mtime of an
-input file (orders, lineitem, customer) changes, or under a new
+Serving: ``nutrition_report`` does not run the plan per call.  Once per
+data version (``plans.serving``) it collects ``nutrition_daily`` — every
+(custkey, date, c_mktsegment) row, in (custkey, date) order — and splits
+it on the driver with ``pyarrow.compute`` into one ``LocalRelation`` per
+``c_mktsegment``, each projected to ``COLUMNS`` and kept in (custkey,
+date) order; an absent segment gets an empty relation with the same
+schema.  The parts together hold the same rows as the one snapshot they
+replace, and building them takes one Spark job, not one per segment.  A
+request is then one date filter over its segment's part: Catalyst folds
+it into the local relation, so it starts no Spark job, analyses no
+segment predicate or projection, and keeps the stored order, so no sort
+runs either.  The snapshot is rebuilt when the listing, size or mtime of
+an input file (orders, lineitem, customer) changes, or under a new
 SparkContext.  It holds O(customers × active days) rows on the driver.
+Inputs ``os.stat`` cannot see get ``nutrition_plan`` itself, uncached.
 The registry name ``nutrition_report`` maps to the Catalyst plan,
-``nutrition_plan``: ``nutrition_daily``, the same filter, then
+``nutrition_plan``: ``nutrition_daily``, the same filters, then
 ``orderBy``.
 """
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -118,10 +125,26 @@ def nutrition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _request_filter(date_from: str, date_to: str, segment: str) -> Column:
-    return F.col("date").between(
-        F.lit(date_from).cast("date"), F.lit(date_to).cast("date")
-    ) & (F.col("c_mktsegment") == segment)
+def _date_filter(date_from: str, date_to: str) -> Column:
+    return F.col("date").between(F.lit(date_from).cast("date"), F.lit(date_to).cast("date"))
+
+
+def _segment_parts(spark: SparkSession, sf_dir: str) -> dict[str | None, DataFrame]:
+    """One ``LocalRelation`` per ``c_mktsegment``, projected to
+    ``COLUMNS`` in (custkey, date) order, split on the driver from ONE
+    collected ``nutrition_daily``; ``None`` maps to the empty part that
+    an absent segment is served."""
+    daily = nutrition_daily(spark, sf_dir).orderBy("custkey", "date")
+    schema = daily.select(*COLUMNS).schema
+    table = daily.toArrow()
+    segment = table["c_mktsegment"]
+    rows = table.select(list(COLUMNS))
+    parts = {
+        s: spark.createDataFrame(rows.filter(pc.equal(segment, s)), schema=schema)
+        for s in pc.unique(segment).drop_null().to_pylist()
+    }
+    parts[None] = spark.createDataFrame(rows.slice(0, 0), schema=schema)
+    return parts
 
 
 def nutrition_report(
@@ -132,15 +155,19 @@ def nutrition_report(
     segment: str = SEGMENT,
 ) -> DataFrame:
     """The report for one date range and segment, in (custkey, date)
-    order, filtered from the per-version ``nutrition_daily`` snapshot."""
-    daily = serving.snapshot(
+    order: a date filter over the segment's part of the per-version
+    ``nutrition_daily`` snapshot (the plan itself for inputs without a
+    version)."""
+    parts = serving.snapshot(
         spark,
         ("nutrition_daily", sf_dir),
         sf_dir,
         INPUT_TABLES,
-        lambda: nutrition_daily(spark, sf_dir).orderBy("custkey", "date"),
+        lambda: _segment_parts(spark, sf_dir),
     )
-    return daily.where(_request_filter(date_from, date_to, segment)).select(*COLUMNS)
+    if parts is None:
+        return nutrition_plan(spark, sf_dir, date_from, date_to, segment)
+    return parts.get(segment, parts[None]).where(_date_filter(date_from, date_to))
 
 
 def nutrition_plan(
@@ -153,7 +180,7 @@ def nutrition_plan(
     """The Catalyst plan of the nutrition report over the star."""
     return (
         nutrition_daily(spark, sf_dir)
-        .where(_request_filter(date_from, date_to, segment))
+        .where(_date_filter(date_from, date_to) & (F.col("c_mktsegment") == segment))
         .select(*COLUMNS)
         .orderBy("custkey", "date")
     )

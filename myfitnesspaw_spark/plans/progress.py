@@ -47,7 +47,8 @@ into the local relation and starts no Spark job.  The snapshot is
 rebuilt when the listing, size or mtime of an input file
 (orders, lineitem, customer, events) changes, or under a new
 SparkContext.  It holds the whole report on the driver:
-O(customers × active days) rows.  The registry name
+O(customers × active days) rows.  Inputs ``os.stat`` cannot see get
+``progress_plan`` itself, uncached.  The registry name
 ``progress_report`` maps to the Catalyst plan, ``progress_plan``.
 """
 
@@ -71,14 +72,18 @@ def progress_report(
     start_date: str = START_DATE,
     default_weight: float = DEFAULT_WEIGHT,
 ) -> DataFrame:
-    """The full progress table, served from the per-version snapshot."""
-    return serving.snapshot(
+    """The full progress table, served from the per-version snapshot
+    (the plan itself for inputs without a version)."""
+    served = serving.snapshot(
         spark,
         ("progress_report", sf_dir, start_date, default_weight),
         sf_dir,
         INPUT_TABLES,
-        lambda: progress_plan(spark, sf_dir, start_date, default_weight),
+        lambda: serving.local(spark, progress_plan(spark, sf_dir, start_date, default_weight)),
     )
+    if served is None:
+        return progress_plan(spark, sf_dir, start_date, default_weight)
+    return served
 
 
 def progress_plan(

@@ -2,9 +2,10 @@
 snapshot.
 
 A report's answer only changes when its input files do, so each key
-(report name + arguments) keeps ONE snapshot: the full report table
-collected once and re-registered as a ``LocalRelation``
-(``createDataFrame`` over Arrow, below the session's
+(report name + arguments) keeps ONE snapshot: whatever its ``build``
+returns, built once per version.  The reports build their snapshots
+with :func:`local`, which collects a plan once and re-registers it as a
+``LocalRelation`` (``createDataFrame`` over Arrow, below the session's
 ``spark.sql.execution.arrow.localRelationThreshold``).  Catalyst folds
 a caller's ``where``/``select`` into that relation, so serving a
 request starts no Spark job.
@@ -14,8 +15,8 @@ The version is the SparkContext ``applicationId`` plus the
 with ``os.stat`` BEFORE the build: files that change during a build
 leave the entry one version behind, and the next request rebuilds.  A
 newer version (or a new SparkContext) replaces the entry.  Inputs that
-``os.stat`` cannot see (remote URIs) are served from the plan
-directly, uncached.
+``os.stat`` cannot see (remote URIs) have no version: ``snapshot``
+returns None and the caller serves its lazy plan, uncached.
 """
 
 from __future__ import annotations
@@ -23,12 +24,15 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable, Hashable, Iterable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+T = TypeVar("T")
+
 _lock = threading.Lock()
 # key -> (version, snapshot): one entry per key, replaced on a new version
-_memo: dict[Hashable, tuple[tuple, DataFrame]] = {}
+_memo: dict[Hashable, tuple[tuple, object]] = {}
 
 
 def data_version(spark: SparkSession, sf_dir: str, tables: Iterable[str]) -> tuple | None:
@@ -55,20 +59,25 @@ def snapshot(
     key: Hashable,
     sf_dir: str,
     tables: Iterable[str],
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    """The driver-resident table of ``build()`` for the current data
-    version; ``build`` runs once per version, under a lock that hits
-    never wait for."""
+    build: Callable[[], T],
+) -> T | None:
+    """``build()`` for the current data version, or None when an input
+    is not a local path; ``build`` runs once per version, under a lock
+    that hits never wait for."""
     version = data_version(spark, sf_dir, tables)
     if version is None:
-        return build()
+        return None
     hit = _memo.get(key)
     if hit is None or hit[0] != version:
         with _lock:
             hit = _memo.get(key)
             if hit is None or hit[0] != version:
-                df = build()
-                hit = (version, spark.createDataFrame(df.toArrow(), schema=df.schema))
+                hit = (version, build())
                 _memo[key] = hit
     return hit[1]
+
+
+def local(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` collected once and re-registered as a driver-side
+    ``LocalRelation`` with the same schema."""
+    return spark.createDataFrame(df.toArrow(), schema=df.schema)

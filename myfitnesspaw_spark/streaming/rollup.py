@@ -162,12 +162,19 @@ def state_shuffle_partitions(spark: SparkSession) -> int:
     State partitions should track STATE VOLUME, not core count —
     default to a quarter of the cores (min 4), overridable via the
     ``spark.myfitnesspaw.stateShufflePartitions`` conf for deployments
-    whose watermark-bounded state actually needs more spread.
+    whose watermark-bounded state actually needs more spread.  The
+    override must be a positive integer (ASCII digits only); anything
+    else raises ``ValueError`` naming the key.
     """
     override = spark.conf.get("spark.myfitnesspaw.stateShufflePartitions", None)
-    if override:
-        return int(override)
-    return max(4, spark.sparkContext.defaultParallelism // 4)
+    if override is None:
+        return max(4, spark.sparkContext.defaultParallelism // 4)
+    if not (override.isascii() and override.isdigit() and int(override) > 0):
+        raise ValueError(
+            "spark.myfitnesspaw.stateShufflePartitions must be a positive integer, "
+            f"got {override!r}"
+        )
+    return int(override)
 
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:

@@ -3,7 +3,11 @@ reference's `tests/myfitnesspaw/test_tasks.py` style."""
 
 from __future__ import annotations
 
+import sys
+import threading
 from datetime import date
+
+import pytest
 
 from myfitnesspaw_spark.report import (
     PALETTE_DEFAULT,
@@ -261,6 +265,63 @@ def test_render_html_jinja_inheritance_and_inline_chart():
 
     stale = _report(rows=[(date(2024, 2, 5), 100, 100)])
     assert "report skipped" in render_html_jinja(stale)
+
+
+def test_render_html_jinja_equals_a_freshly_built_environment(monkeypatch):
+    """The once-per-process Environment renders byte-identical HTML to
+    one built for the call, for fresh, stale and inline-chart reports."""
+    pytest.importorskip("jinja2")
+    from myfitnesspaw_spark.report import progress
+
+    cases = [
+        (_report(), None),
+        (_report(rows=[(date(2024, 2, 5), 100, 100)]), None),  # stale
+        (_report(), "chart.png@report"),
+    ]
+    cached = [progress.render_html_jinja(r, chart_cid=cid) for r, cid in cases]
+    assert cached == [progress.render_html_jinja(r, chart_cid=cid) for r, cid in cases]
+    # __wrapped__ is the uncached function: a new Environment per call.
+    monkeypatch.setattr(progress, "_template_env", progress._template_env.__wrapped__)
+    fresh = [progress.render_html_jinja(r, chart_cid=cid) for r, cid in cases]
+    assert cached == fresh
+    assert "report skipped" in fresh[1] and 'src="cid:chart.png@report"' in fresh[2]
+
+
+def test_concurrent_first_renders_build_the_environment_once(monkeypatch):
+    jinja2 = pytest.importorskip("jinja2")
+    from myfitnesspaw_spark.report import progress
+
+    builds = []
+
+    class CountingEnvironment(jinja2.Environment):
+        def __init__(self, *args, **kwargs):
+            builds.append(1)
+            super().__init__(*args, **kwargs)
+
+    monkeypatch.setattr(jinja2, "Environment", CountingEnvironment)
+    progress._template_env.cache_clear()
+    clients = 8
+    gate = threading.Barrier(clients)
+    html = [None] * clients
+
+    def client(i):
+        gate.wait()
+        html[i] = progress.render_html_jinja(_report(), chart_cid="chart.png@report")
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(clients)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+        progress._template_env.cache_clear()  # drop the counting Environment
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert html[0] and all(h == html[0] for h in html)
 
 
 def test_full_report_flow_end_to_end():

@@ -4,6 +4,7 @@ equivalence with the registered Catalyst plans."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import threading
@@ -20,6 +21,7 @@ from myfitnesspaw_spark.plans.progress import PROGRESS_ORACLE, progress_report
 from tests.conftest import assert_matches_oracle
 
 STAR = ("orders", "lineitem", "customer", "events")
+WIDE = ("1992-01-01", "1998-12-31")  # every order date
 
 
 def _star_copy(src: str, dst) -> str:
@@ -38,6 +40,10 @@ def _duck(sf: str) -> duckdb.DuckDBPyConnection:
 
 def _entries(sf: str) -> list:
     return [k for k in serving._memo if sf in k]
+
+
+def _segments(sf: str) -> list[str]:
+    return sorted(set(pq.read_table(f"{sf}/customer.parquet")["c_mktsegment"].to_pylist()))
 
 
 def test_rewritten_inputs_invalidate_the_snapshot(spark, sf_dir, tmp_path):
@@ -81,6 +87,10 @@ def test_rewritten_inputs_invalidate_the_snapshot(spark, sf_dir, tmp_path):
         duck.close()
     assert after_p.collect() != before_p
     assert after_n.collect() != before_n
+    # Every segment's part was rebuilt: BUILDING and MACHINERY swapped.
+    for segment in ("BUILDING", "MACHINERY", "HOUSEHOLD"):
+        served = nutrition_report(spark, sf, *WIDE, segment)
+        assert served.collect() == nutrition_plan(spark, sf, *WIDE, segment).collect(), segment
     assert len(_entries(sf)) == 2  # replaced, not added
 
 
@@ -125,6 +135,7 @@ def test_served_nutrition_equals_plan_in_order(spark, sf_dir):
         ("1996-06-01", "1998-12-31", "HOUSEHOLD"),
         ("1998-01-01", "1997-01-01", "BUILDING"),  # empty range
         ("1992-01-01", "1998-12-31", "NO SUCH SEGMENT"),
+        *[(*WIDE, segment) for segment in _segments(sf_dir)],
     ]
     for date_from, date_to, segment in cases:
         served = nutrition_report(spark, sf_dir, date_from, date_to, segment)
@@ -140,6 +151,48 @@ def test_served_nutrition_equals_plan_in_order(spark, sf_dir):
         assert keys == sorted(keys)
     assert not nutrition_report(spark, sf_dir, *cases[3]).collect()
     assert not nutrition_report(spark, sf_dir, *cases[4]).collect()
+    # The per-segment parts split the snapshot: together they hold every
+    # daily row once.
+    parts = serving._memo[("nutrition_daily", sf_dir)][1]
+    assert sum(df.count() for df in parts.values()) == nutrition.nutrition_daily(spark, sf_dir).count()
 
     point = progress_report(spark, sf_dir).where(F.col("custkey") == 1)
     assert point._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+
+
+def test_nutrition_daily_builds_once_per_data_version(spark, sf_dir, tmp_path, monkeypatch):
+    sf = _star_copy(sf_dir, tmp_path / "star")
+    builds = []
+    daily = nutrition.nutrition_daily
+
+    def counting_daily(*args):
+        builds.append(args)
+        return daily(*args)
+
+    monkeypatch.setattr(nutrition, "nutrition_daily", counting_daily)
+    requests = [(*WIDE, s) for s in [*_segments(sf), "NO SUCH SEGMENT"]]
+    first = [nutrition_report(spark, sf, *r).collect() for r in requests]
+    assert len(builds) == 1
+    # A new mtime on one input is a new data version: one more build.
+    st = os.stat(f"{sf}/lineitem.parquet")
+    os.utime(f"{sf}/lineitem.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    again = [nutrition_report(spark, sf, *r).collect() for r in requests]
+    assert len(builds) == 2
+    assert again == first
+
+
+def test_unversioned_inputs_are_served_from_the_lazy_plan(spark, sf_dir, monkeypatch):
+    def no_build():
+        raise AssertionError("an unversioned input must not be collected")
+
+    monkeypatch.setattr(serving, "data_version", lambda *args: None)
+    monkeypatch.setattr(serving, "local", lambda *args: no_build())
+    monkeypatch.setattr(nutrition, "_segment_parts", lambda *args: no_build())
+    monkeypatch.setattr(serving, "_memo", {})
+    served = nutrition_report(spark, sf_dir, *WIDE, "HOUSEHOLD")
+    planned = nutrition_plan(spark, sf_dir, *WIDE, "HOUSEHOLD")
+    assert served.collect() == planned.collect()
+    report = progress_report(spark, sf_dir)
+    assert not report._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+    assert report.count() == progress.progress_plan(spark, sf_dir).count()
+    assert not serving._memo

@@ -5,9 +5,12 @@ sessionize_stream docstring)."""
 
 from __future__ import annotations
 
+import pytest
+
 from myfitnesspaw_spark.plans.stream_queries import sessionize_stateful_stream
 from myfitnesspaw_spark.sources import load_table
 from myfitnesspaw_spark.streaming import sessionize
+from myfitnesspaw_spark.streaming.rollup import state_shuffle_partitions
 
 
 def test_stateful_stream_matches_batch_closed_sessions(spark, sf_dir):
@@ -796,3 +799,18 @@ def test_stream_table_source_scheme_case_and_single_slash_policy(tmp_path):
         assert fake.readStream.options["pathGlobFilter"] == "nation.parquet"
     finally:
         os.chdir(cwd)
+
+
+def test_state_shuffle_partitions_parses_the_override_strictly(spark):
+    key = "spark.myfitnesspaw.stateShufflePartitions"
+    assert spark.conf.get(key, None) is None
+    assert state_shuffle_partitions(spark) == max(4, spark.sparkContext.defaultParallelism // 4)
+    try:
+        spark.conf.set(key, "8")
+        assert state_shuffle_partitions(spark) == 8
+        for bad in ("0", "-1", "8x", "", " 8", "8.0"):
+            spark.conf.set(key, bad)
+            with pytest.raises(ValueError, match=key):
+                state_shuffle_partitions(spark)
+    finally:
+        spark.conf.unset(key)
