@@ -401,47 +401,34 @@ GROUP BY 1, 2
 # shape recursion exists for; a global `sequence()` spine like
 # forward_fill_gauge's would over-generate per user).  Spark 4 accepts
 # only UNION ALL in recursive CTEs, so the pattern is the bounded
-# ladder (`WHERE d < last_d`) — acyclic by construction, depth ≤ the
-# date span (29 days here, under the 100-level default limit).  The
-# DuckDB oracle runs the IDENTICAL recursive CTE — both engines
-# terminate on the same bound.  Scale shape: the seed aggregate is one
-# shuffle; each recursion level is a narrow projection of the previous
-# level (no joins inside the loop); the final count join shuffles on
-# (user_id, day).
+# ladder (`WHERE d < last_d`) — acyclic by construction, depth = the
+# longest per-user date span (29 days in the testdata).  The query
+# carries its own depth ceiling (`MAX RECURSION LEVEL 1000`), so a
+# wider-span dataset fails on semantics, not on the 100-level session
+# default, and no session conf is touched.  The DuckDB oracle runs the
+# IDENTICAL recursive CTE — both engines terminate on the same bound.
+# Scale shape: the seed aggregate is one shuffle; each recursion level
+# is a narrow projection of the previous level (no joins inside the
+# loop); the final count join shuffles on (user_id, day).
 
 def recursive_user_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Depth = per-user date span (29 days in the testdata).  Raise the
-    # recursion ceiling defensively so a wider-span dataset fails on
-    # semantics, not on the default 100-level limit — and restore the
-    # prior value afterwards so the shared session is not perturbed
-    # (same save/restore discipline as streaming/rollup.py's shuffle-
-    # partition override).  The limit is consulted when the recursive
-    # plan is resolved, which `spark.sql` does eagerly.
-    prior = spark.conf.get("spark.sql.cteRecursionLevelLimit", None)
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "1000")
-    try:
-        load_table(spark, sf_dir, "events").createOrReplaceTempView("events_rus")
-        return spark.sql(
-            """
-            WITH RECURSIVE spine (user_id, day, last_d) AS (
-              SELECT user_id, MIN(CAST(ts AS DATE)), MAX(CAST(ts AS DATE))
-              FROM events_rus GROUP BY user_id
-              UNION ALL
-              SELECT user_id, DATE_ADD(day, 1), last_d FROM spine WHERE day < last_d
-            ),
-            daily AS (
-              SELECT user_id, CAST(ts AS DATE) AS day, COUNT(*) AS n
-              FROM events_rus GROUP BY 1, 2
-            )
-            SELECT s.user_id, s.day, COALESCE(d.n, 0) AS n_events
-            FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day
-            """
+    return spark.sql(
+        """
+        WITH RECURSIVE spine (user_id, day, last_d) MAX RECURSION LEVEL 1000 AS (
+          SELECT user_id, MIN(CAST(ts AS DATE)), MAX(CAST(ts AS DATE))
+          FROM {events} GROUP BY user_id
+          UNION ALL
+          SELECT user_id, DATE_ADD(day, 1), last_d FROM spine WHERE day < last_d
+        ),
+        daily AS (
+          SELECT user_id, CAST(ts AS DATE) AS day, COUNT(*) AS n
+          FROM {events} GROUP BY 1, 2
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.cteRecursionLevelLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionLevelLimit", prior)
+        SELECT s.user_id, s.day, COALESCE(d.n, 0) AS n_events
+        FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day
+        """,
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 RECURSIVE_USER_SPINE_ORACLE = """

@@ -182,6 +182,9 @@ def mfp_api_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.read.format("mfp_api")`` (sources/mfp_datasource.py)."""
     from myfitnesspaw_spark.sources import mfp_datasource
 
+    # Not on the caller: Spark 4.1 refuses to register a name on any session
+    # while the ACTIVE one holds it, which would break mfp_api_stream_rollup.
+    spark = spark.newSession()
     mfp_datasource.register(spark)
     return (
         spark.read.format("mfp_api")
@@ -219,12 +222,15 @@ def mfp_api_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 as a STREAMING source: the same custom data source read with
     ``spark.readStream`` (SimpleDataSourceStreamReader — date offsets,
     deterministic replay), rolled up per user and drained with
-    availableNow into a memory sink.  Final state must equal the batch
-    read's rollup, which is the oracle."""
+    availableNow into a memory sink, all in a ``stream_session`` child.
+    Final state must equal the batch read's rollup, which is the
+    oracle."""
     from pyspark.sql import functions as F
 
     from myfitnesspaw_spark.sources import mfp_datasource
+    from myfitnesspaw_spark.streaming.rollup import stream_session
 
+    spark = stream_session(spark)
     mfp_datasource.register(spark)
     stream = (
         spark.readStream.format("mfp_api")
@@ -239,25 +245,15 @@ def mfp_api_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cardio_minutes").alias("cardio_minutes"),
         F.sum("water").alias("water"),
     )
-    from myfitnesspaw_spark.streaming.rollup import state_shuffle_partitions
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    query = (
+        agg.writeStream.format("memory")
+        .queryName("mfp_api_stream_rollup_sink")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName("mfp_api_stream_rollup_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table("mfp_api_stream_rollup_sink")
+    query.awaitTermination()
+    return agg.sparkSession.table("mfp_api_stream_rollup_sink")
 
 
 MFP_API_STREAM_ORACLE = f"""

@@ -22,10 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myfitnesspaw_spark.functions.numeric import epoch_us
-from myfitnesspaw_spark.streaming.rollup import (
-    read_events_stream,
-    state_shuffle_partitions,
-)
+from myfitnesspaw_spark.streaming.rollup import read_events_stream
 
 
 def stream_stream_click_error(
@@ -70,24 +67,16 @@ def stream_stream_click_error(
         "inner",
     )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    query = (
+        joined.writeStream.format("memory")
+        .queryName(sink_name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    query.awaitTermination()
 
-    return spark.table(sink_name).select(
+    return joined.sparkSession.table(sink_name).select(
         "click_id",
         "user_id",
         "error_id",
@@ -147,24 +136,16 @@ def stream_stream_click_error_outer(
         "leftOuter",
     )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    query = (
+        joined.writeStream.format("memory")
+        .queryName(sink_name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    query.awaitTermination()
 
-    return spark.table(sink_name).select(
+    return joined.sparkSession.table(sink_name).select(
         "click_id",
         "user_id",
         "error_id",

@@ -28,6 +28,10 @@ def stream_upsert_latest(
     """Drain the stream with ``foreachBatch``, merging each micro-batch
     into ``state_view`` (keep-latest per key), and return the final
     merged state.
+
+    Merges run at the shuffle partitions of the session
+    ``events_stream`` was built in: build it with
+    ``read_events_stream`` / ``stream_session``.
     """
     spark = events_stream.sparkSession
     # GLOBAL temp view: foreachBatch executes on a micro-batch session

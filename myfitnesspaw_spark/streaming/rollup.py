@@ -177,6 +177,26 @@ def state_shuffle_partitions(spark: SparkSession) -> int:
     return int(override)
 
 
+def stream_session(spark: SparkSession) -> SparkSession:
+    """``spark.newSession()`` (same SparkContext, its own SQL conf) set
+    up for streams: shuffle partitions = :func:`state_shuffle_partitions`
+    (read from ``spark``, so a runtime knob override holds), zone UTC
+    and nanosAsLong on.  A stateful query freezes its state-partition
+    count from the session its DataFrame was built in, so building a
+    stream here sizes its state without changing any conf another
+    caller of ``spark`` reads.  A memory sink's view lives in the
+    session that started the query: read it as
+    ``df.sparkSession.table(sink)``.
+    """
+    child = spark.newSession()
+    child.conf.set(
+        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    )
+    child.conf.set("spark.sql.session.timeZone", "UTC")
+    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return child
+
+
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -192,26 +212,24 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events parquet with ``ts`` normalized to
-    zoned TIMESTAMP under a pinned-UTC session zone.
+    zoned TIMESTAMP, built in a UTC :func:`stream_session` child.
 
     Streaming event time must be TimestampType — ``withWatermark`` on a
     TIMESTAMP_NTZ column raises EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE —
     so unlike the batch loader (sources/tables.py, which normalizes to
-    NTZ for DuckDB parity) the stream keeps ``ts`` zoned.  With the
-    session zone pinned to UTC here, every downstream rendering
-    (``date_format``, ``date_trunc``, ``epoch_us``) of the zoned value
-    is wall-clock-identical to the batch loader's NTZ value, so the
-    same DuckDB oracles hold.  The pin happens at plan-build time; the
-    streaming queries in this module execute within the same call, so
-    a caller cannot re-zone the session between build and run.
+    NTZ for DuckDB parity) the stream keeps ``ts`` zoned.  Every frame
+    derived from the stream, and every stateful query started from it,
+    takes the child's UTC zone and state-partition count, so each
+    rendering (``date_format``, ``date_trunc``, ``epoch_us``) of the
+    zoned value is wall-clock-identical to the batch loader's NTZ value
+    and the same DuckDB oracles hold; the caller's conf is untouched.
 
     File streams need an explicit schema, and the testdata's physical
     layout has shipped both as TIMESTAMP(NANOS) (scannable only as
     epoch-nanos BIGINT) and as TIMESTAMP(MICROS, no zone) — so sniff
     the footer through a one-off batch read and declare accordingly.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = stream_session(spark)
     raw_ts = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
     ts_type: T.DataType = {
         "bigint": T.LongType(),
@@ -227,8 +245,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     elif raw_ts != "timestamp":
         # TIMESTAMP_NTZ footer (the live testdata path): the NTZ→LTZ
-        # cast reads the session zone at eval time — UTC pinned above
-        # makes it wall-clock identity.
+        # cast reads the session zone — the child's UTC makes it
+        # wall-clock identity.
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
 
@@ -344,24 +362,13 @@ def streaming_hourly_rollup(
             F.sum(money_cents(F.col("value"))).alias("value_cents"),
         )
     )
-    # The state-store partition count is frozen at the query's first
-    # run from spark.sql.shuffle.partitions; size it to the cluster
-    # (a caller-provided session may still carry the 200 default).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    state = _drain_update_merge(
+        agg,
+        ["win", "event_type"],
+        f"{sink_name}_state",
+        sink_name,
+        multi_batch_exact=drain_watermark is not None,
     )
-    try:
-        state = _drain_update_merge(
-            agg,
-            ["win", "event_type"],
-            f"{sink_name}_state",
-            sink_name,
-            multi_batch_exact=drain_watermark is not None,
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return state.select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
         "event_type",
@@ -397,21 +404,13 @@ def streaming_sliding_rollup(
             F.sum(money_cents(F.col("value"))).alias("value_cents"),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    state = _drain_update_merge(
+        agg,
+        ["win", "event_type"],
+        f"{sink_name}_state",
+        sink_name,
+        multi_batch_exact=drain_watermark is not None,
     )
-    try:
-        state = _drain_update_merge(
-            agg,
-            ["win", "event_type"],
-            f"{sink_name}_state",
-            sink_name,
-            multi_batch_exact=drain_watermark is not None,
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return state.select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type",
@@ -458,23 +457,15 @@ def streaming_dedup_counts(
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_user_minutes"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    query = (
+        dedup.writeStream.format("memory")
+        .queryName(sink_name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        query = (
-            dedup.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(sink_name)
+    query.awaitTermination()
+    return dedup.sparkSession.table(sink_name)
 
 
 def streaming_static_enrich(
@@ -513,22 +504,13 @@ def streaming_static_enrich(
             F.sum(money_cents(F.col("value"))).alias("value_cents"),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    return _drain_update_merge(
+        agg,
+        ["c_mktsegment", "event_type"],
+        f"{sink_name}_state",
+        sink_name,
+        multi_batch_exact=True,
     )
-    try:
-        state = _drain_update_merge(
-            agg,
-            ["c_mktsegment", "event_type"],
-            f"{sink_name}_state",
-            sink_name,
-            multi_batch_exact=True,
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return state
 
 
 def streaming_dedup_within_watermark_counts(
@@ -562,22 +544,13 @@ def streaming_dedup_within_watermark_counts(
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_user_minutes"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    return _drain_update_merge(
+        dedup,
+        ["event_type"],
+        f"{sink_name}_state",
+        sink_name,
+        multi_batch_exact=True,
     )
-    try:
-        state = _drain_update_merge(
-            dedup,
-            ["event_type"],
-            f"{sink_name}_state",
-            sink_name,
-            multi_batch_exact=True,
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return state
 
 
 def streaming_lsh_ingest_probe(
@@ -638,7 +611,9 @@ def streaming_lsh_ingest_probe(
     # rename/type change must fail this plan loudly at analysis, not
     # read nulls and emit zero signatures.
     doc_schema = base.schema
-    raw = stream_table_source(spark, sf_dir, "documents", doc_schema)
+    raw = stream_table_source(
+        stream_session(spark), sf_dir, "documents", doc_schema
+    )
     incoming = raw.where(F.col("doc_id") % 10 == 0)
     # The SAME signing chain the store builder ran (one implementation,
     # so producer and prober cannot drift); checkpoint=False is the
@@ -651,19 +626,10 @@ def streaming_lsh_ingest_probe(
 
     hits = bands.join(store, ["band", "key"])
     agg = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_band_hits"))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    return _drain_update_merge(
+        agg,
+        ["doc_id"],
+        f"{sink_name}_state",
+        sink_name,
+        multi_batch_exact=True,
     )
-    try:
-        state = _drain_update_merge(
-            agg,
-            ["doc_id"],
-            f"{sink_name}_state",
-            sink_name,
-            multi_batch_exact=True,
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return state

@@ -26,7 +26,6 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from myfitnesspaw_spark.functions.numeric import epoch_us, money_cents, ntz_from_us
-from myfitnesspaw_spark.streaming.rollup import state_shuffle_partitions
 
 DEFAULT_GAP_MIN = 30
 
@@ -170,6 +169,9 @@ def sessionize_stream(
     is therefore still in state at shutdown; the returned frame holds
     every CLOSED session, and the driver records this query as a
     rows-only check.
+
+    State partitions come from the session ``events_stream`` was built
+    in: build it with ``read_events_stream`` / ``stream_session``.
     """
     gap_us = gap_minutes * 60 * 1_000_000
     prepped = events_stream.select(
@@ -184,25 +186,16 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    spark = events_stream.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
+    query = (
+        sessions.writeStream.format("memory")
+        .queryName(sink_name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        query = (
-            sessions.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    query.awaitTermination()
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return spark.table(sink_name).select(
+    return events_stream.sparkSession.table(sink_name).select(
         "user_id",
         "n_events",
         F.date_format(ntz_from_us(F.col("start_us")), fmt).alias("start_ts"),

@@ -18,7 +18,8 @@ per-user dense vector of all types.
 Scale shape: state volume is Σ_user |distinct types seen|, bounded by
 (users × type cardinality) regardless of stream length; each
 micro-batch shuffles only its own rows to the state partitions
-(sized by ``state_shuffle_partitions``, never defaultParallelism);
+(sized by ``state_shuffle_partitions`` through the stream's
+``stream_session``, never defaultParallelism);
 emission is update-mode (touched entries only), drained through the
 same keyed ``foreachBatch`` merge every other stateful query in this
 package uses.  All aggregate arithmetic is exact integers — cents and
@@ -41,10 +42,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from myfitnesspaw_spark.functions.numeric import epoch_us, money_cents
-from myfitnesspaw_spark.streaming.rollup import (
-    _drain_update_merge,
-    state_shuffle_partitions,
-)
+from myfitnesspaw_spark.streaming.rollup import _drain_update_merge
 
 # The v2 Python state protocol rides a protobuf channel
 # (pyspark/sql/streaming/proto/StateMessage_pb2) — `protobuf` is a
@@ -188,44 +186,36 @@ def tws_user_type_rollup(
     """Drain the events stream through the MapState rollup and return
     the final (user_id, event_type) totals — batch-equivalent to
     ``GROUP BY user_id, event_type`` with COUNT / Σcents / MIN / MAX,
-    which is exactly what the DuckDB oracle certifies."""
+    which is exactly what the DuckDB oracle certifies.
+
+    State partitions come from the session ``events_stream`` was built
+    in: build it with ``read_events_stream`` / ``stream_session``."""
     prepped = events_stream.select(
         "user_id",
         "event_type",
         epoch_us(F.col("ts")).alias("us"),
         money_cents(F.col("value")).alias("cents"),
     )
-    spark = events_stream.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
-        if HAS_TWS_RUNTIME:
-            rolled = prepped.groupBy("user_id").transformWithStateInPandas(
-                statefulProcessor=_UserTypeRollup(),
-                outputStructType=_OUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        else:
-            from pyspark.sql.streaming.state import GroupStateTimeout
-
-            rolled = prepped.groupBy("user_id").applyInPandasWithState(
-                _v1_rollup_fn,
-                outputStructType=_OUT_SCHEMA,
-                stateStructType="types array<string>, aggs array<array<bigint>>",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        return _drain_update_merge(
-            rolled,
-            ["user_id", "event_type"],
-            state_view="tws_user_type_rollup_state",
-            sink_name=sink_name,
+    if HAS_TWS_RUNTIME:
+        rolled = prepped.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=_UserTypeRollup(),
+            outputStructType=_OUT_SCHEMA,
+            outputMode="Update",
+            timeMode="None",
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    else:
+        from pyspark.sql.streaming.state import GroupStateTimeout
+
+        rolled = prepped.groupBy("user_id").applyInPandasWithState(
+            _v1_rollup_fn,
+            outputStructType=_OUT_SCHEMA,
+            stateStructType="types array<string>, aggs array<array<bigint>>",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    return _drain_update_merge(
+        rolled,
+        ["user_id", "event_type"],
+        state_view="tws_user_type_rollup_state",
+        sink_name=sink_name,
+    )

@@ -5,6 +5,8 @@ is allowlisted below with its site count and what it mutates; a new
 call anywhere under ``myfitnesspaw_spark/`` fails this test.  The list
 may only shrink: a file whose calls are removed must be pruned, a count
 that falls must be lowered, and ``operators/`` is never allowed back.
+The ``streaming/rollup.py`` sites configure the fresh child session that
+``stream_session`` returns, which no other caller reads.
 """
 
 from __future__ import annotations
@@ -14,16 +16,26 @@ import os
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "myfitnesspaw_spark")
 
-# relative file -> (n_sites, what it mutates); every entry is ROADMAP item 6
+# relative file -> (n_sites, what it mutates)
 ALLOWED = {
-    "plans/behavior_queries.py": (3, "ROADMAP item 6: cteRecursionLevelLimit set/restore around a recursive CTE"),
-    "plans/etl_flow.py": (2, "ROADMAP item 6: shuffle partitions set/restore around a stateful stream"),
     "sources/tables.py": (2, "ROADMAP item 6: re-pins nanosAsLong and session.timeZone at read time"),
-    "streaming/joins.py": (4, "ROADMAP item 6: state shuffle partitions set/restore per stream"),
-    "streaming/rollup.py": (14, "ROADMAP item 6: nanosAsLong/timeZone pins + state shuffle partitions set/restore"),
-    "streaming/sessions.py": (2, "ROADMAP item 6: state shuffle partitions set/restore"),
-    "streaming/tws.py": (3, "ROADMAP item 6: state shuffle partitions set/unset/restore"),
+    "streaming/rollup.py": (3, "child session created by `stream_session`, never the caller's"),
 }
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read())
+
+
+def _is_conf_mutation(n: ast.AST) -> bool:
+    return (
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("set", "unset")
+        and isinstance(n.func.value, ast.Attribute)
+        and n.func.value.attr == "conf"
+    )
 
 
 def _conf_mutations() -> dict[str, list[int]]:
@@ -38,16 +50,8 @@ def _conf_mutations() -> dict[str, list[int]]:
                 continue
             path = os.path.join(dirpath, f)
             rel = os.path.relpath(path, PKG)
-            with open(path) as fh:
-                tree = ast.parse(fh.read())
-            for n in ast.walk(tree):
-                if (
-                    isinstance(n, ast.Call)
-                    and isinstance(n.func, ast.Attribute)
-                    and n.func.attr in ("set", "unset")
-                    and isinstance(n.func.value, ast.Attribute)
-                    and n.func.value.attr == "conf"
-                ):
+            for n in ast.walk(_parse(path)):
+                if _is_conf_mutation(n):
                     sites.setdefault(rel, []).append(n.lineno)
     return sites
 
@@ -76,3 +80,15 @@ def test_conf_mutations_are_allowlisted_and_only_shrink():
     )
     gone = sorted(set(ALLOWED) - set(sites))
     assert not gone, f"Stale ALLOWED entries (no mutation left): {gone}"
+
+
+def test_streaming_conf_writes_only_configure_the_child_session():
+    """Every conf write under streaming/ is on the fresh child that
+    ``stream_session`` returns, never on a caller's session."""
+    tree = _parse(os.path.join(PKG, "streaming", "rollup.py"))
+    (helper,) = [
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "stream_session"
+    ]
+    inside = sorted(n.lineno for n in ast.walk(helper) if _is_conf_mutation(n))
+    assert inside == sorted(_conf_mutations()["streaming/rollup.py"])

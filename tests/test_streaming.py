@@ -814,3 +814,99 @@ def test_state_shuffle_partitions_parses_the_override_strictly(spark):
                 state_shuffle_partitions(spark)
     finally:
         spark.conf.unset(key)
+
+
+_CALLER_CONF = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.session.timeZone": "America/New_York",
+    "spark.myfitnesspaw.stateShufflePartitions": "3",
+}
+
+
+@pytest.fixture
+def caller_conf(spark):
+    """The shared session set the way another caller might have it:
+    shuffle partitions and zone unlike the stream's, and the
+    state-partition knob at 3.  Restored afterwards."""
+    prior = {k: spark.conf.get(k, None) for k in _CALLER_CONF}
+    try:
+        for k, v in _CALLER_CONF.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_streaming_rollup_never_changes_the_callers_conf(spark, sf_dir, duck, caller_conf):
+    """A stream runs in its own child session: a second thread polling
+    the caller's conf during a rollup sees only the caller's values,
+    and the rollup still renders UTC wall clocks (oracle match)."""
+    import threading
+
+    from tests.conftest import assert_matches_oracle
+    from myfitnesspaw_spark.plans.stream_queries import STREAMING_ROLLUP_ORACLE
+    from myfitnesspaw_spark.streaming import streaming_hourly_rollup
+
+    seen: set[tuple[str, str]] = set()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(
+                (
+                    spark.conf.get("spark.sql.shuffle.partitions"),
+                    spark.conf.get("spark.sql.session.timeZone"),
+                )
+            )
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        out = streaming_hourly_rollup(spark, sf_dir)
+        assert_matches_oracle(out, duck, STREAMING_ROLLUP_ORACLE)
+    finally:
+        done.set()
+        poller.join(timeout=30)
+    assert not poller.is_alive()
+    assert seen == {("7", "America/New_York")}
+
+
+def test_events_stream_state_partitions_follow_the_knob(spark, sf_dir, tmp_path, caller_conf):
+    """A stateful query the caller starts from read_events_stream
+    freezes the knob's state-partition count (3), not the caller's
+    shuffle partitions (7)."""
+    import os
+
+    from myfitnesspaw_spark.streaming.rollup import read_events_stream
+
+    ckpt = tmp_path / "ckpt"
+    q = (
+        read_events_stream(spark, sf_dir)
+        .groupBy("event_type")
+        .count()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(ckpt))
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    parts = [d for d in os.listdir(ckpt / "state" / "0") if d.isdigit()]
+    assert sorted(parts) == ["0", "1", "2"]
+
+
+def test_mfp_api_batch_read_leaves_the_stream_free_to_register(spark, duck):
+    """The batch mfp_api read registers its source on a child session:
+    registered on the caller (the active session), it would make the
+    stream's child registration fail with DATA_SOURCE_ALREADY_EXISTS."""
+    from tests.conftest import assert_matches_oracle
+    from myfitnesspaw_spark.plans import etl_flow as ef
+
+    batch = ef.mfp_api_datasource(spark, "unused")
+    assert_matches_oracle(batch, duck, ef.MFP_API_DS_ORACLE)
+    stream = ef.mfp_api_stream_rollup(spark, "unused")
+    assert_matches_oracle(stream, duck, ef.MFP_API_STREAM_ORACLE)
