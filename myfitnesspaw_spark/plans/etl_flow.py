@@ -222,12 +222,13 @@ def mfp_api_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 as a STREAMING source: the same custom data source read with
     ``spark.readStream`` (SimpleDataSourceStreamReader — date offsets,
     deterministic replay), rolled up per user and drained with
-    availableNow into a memory sink, all in a ``stream_session`` child.
+    availableNow through ``drain``, all in a ``stream_session`` child.
     Final state must equal the batch read's rollup, which is the
     oracle."""
     from pyspark.sql import functions as F
 
     from myfitnesspaw_spark.sources import mfp_datasource
+    from myfitnesspaw_spark.streaming.merge import drain
     from myfitnesspaw_spark.streaming.rollup import stream_session
 
     spark = stream_session(spark)
@@ -245,15 +246,9 @@ def mfp_api_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cardio_minutes").alias("cardio_minutes"),
         F.sum("water").alias("water"),
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName("mfp_api_stream_rollup_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        agg, "mfp_api_stream_rollup_sink", "complete", merge=lambda _, batch: batch
     )
-    query.awaitTermination()
-    return agg.sparkSession.table("mfp_api_stream_rollup_sink")
 
 
 MFP_API_STREAM_ORACLE = f"""

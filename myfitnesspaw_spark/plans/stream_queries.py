@@ -3,7 +3,7 @@
 tables, each with a DuckDB oracle.
 
 ``streaming_hourly_rollup`` executes a REAL Structured Streaming query
-(readStream → watermark → tumbling window → memory sink, availableNow)
+(readStream → watermark → tumbling window → ``drain``, availableNow)
 and still oracle-checks: with the backlog drained in one trigger the
 result equals the batch rollup, which IS the SQL oracle.
 """
@@ -27,7 +27,7 @@ from myfitnesspaw_spark.streaming import (
     stream_upsert_latest,
     streaming_hourly_rollup,
 )
-from myfitnesspaw_spark.streaming.lint_hook import lint_batch_plan
+from myfitnesspaw_spark.streaming.merge import drain
 
 _CENTS = "CAST(round(value * 100) AS BIGINT)"
 
@@ -294,8 +294,8 @@ WHERE c.event_type = 'click' AND e.event_type = 'error'
 
 # --- streaming_cms_heavy_hitters ------------------------------------------
 # Mergeable-sketch maintenance as a STREAM: each micro-batch computes
-# its partial vocabulary counts and foreachBatch merges them
-# ADDITIVELY into global state (base ⊕ delta, the incremental-view-
+# its partial vocabulary counts and ``drain`` merges them
+# ADDITIVELY into the running counts (base ⊕ delta, the incremental-view-
 # maintenance shape) — then the shared CMS tail reports heavy hitters
 # from the merged vocabulary.  Every CMS counter is an integer SUM, so
 # ANY partition of the corpus into micro-batches produces the
@@ -308,6 +308,7 @@ def streaming_cms_heavy_hitters(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from myfitnesspaw_spark.functions.text import tokens
     from myfitnesspaw_spark.plans.sampling_queries import cms_report_from_counts
@@ -328,38 +329,27 @@ def streaming_cms_heavy_hitters(
         else None,
     )
 
-    state_view = "cms_stream_counts"
-    spark.createDataFrame([], "token string, n_true bigint").createOrReplaceGlobalTempView(
-        state_view
-    )
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def _add(counts: DataFrame, batch: DataFrame) -> DataFrame:
         delta = (
             batch.select(F.explode(tokens(F.col("text"))).alias("token"))
             .where(F.col("token") != "")
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("n_true"))
         )
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(delta)
+        return (
+            counts.unionByName(delta)
             .groupBy("token")
             .agg(F.sum("n_true").alias("n_true"))
         )
-        lint_batch_plan("streaming_cms_sink", merged)
-        merged.localCheckpoint().createOrReplaceGlobalTempView(state_view)
 
-    query = (
-        raw.writeStream.foreachBatch(_merge)
-        .queryName("streaming_cms_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    counts = drain(
+        raw,
+        "streaming_cms_sink",
+        merge=_add,
+        schema=T.StructType(
+            [T.StructField("token", T.StringType()), T.StructField("n_true", T.LongType())]
+        ),
     )
-    query.awaitTermination()
-    counts = spark.table(f"global_temp.{state_view}").localCheckpoint(eager=True)
-    spark.sql(f"DROP VIEW IF EXISTS global_temp.{state_view}")
     return cms_report_from_counts(counts)
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myfitnesspaw_spark.functions.numeric import epoch_us
+from myfitnesspaw_spark.streaming.merge import drain
 from myfitnesspaw_spark.streaming.rollup import read_events_stream
 
 
@@ -66,17 +67,7 @@ def stream_stream_click_error(
         ),
         "inner",
     )
-
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    return joined.sparkSession.table(sink_name).select(
+    return drain(joined, sink_name).select(
         "click_id",
         "user_id",
         "error_id",
@@ -135,17 +126,7 @@ def stream_stream_click_error_outer(
         ),
         "leftOuter",
     )
-
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    return joined.sparkSession.table(sink_name).select(
+    return drain(joined, sink_name).select(
         "click_id",
         "user_id",
         "error_id",

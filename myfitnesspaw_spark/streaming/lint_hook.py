@@ -4,9 +4,10 @@ The registry plan lint (tests/test_registry_oracle.py) checks only the
 FINAL DataFrame each query returns — for streaming queries that is a
 ``localCheckpoint`` scan of the drained state, which hides the plans
 that actually do the work inside ``foreachBatch`` (VERDICT r12 #8).
-Each ``foreachBatch`` merge body therefore calls
-``lint_batch_plan(sink_name, frame)`` on the frame it is about to
-checkpoint.  In production the hook is ``None`` and the call is a
+Every stream drains through ``streaming/merge.py:drain``, which calls
+``lint_batch_plan(name, frame)`` on each merged frame it is about to
+checkpoint, whatever the merge (append, complete, keyed upsert or
+additive).  In production the hook is ``None`` and the call is a
 no-op; the oracle sweep installs a lint so the inner streaming plans
 are held to the same no-CartesianProduct / no-row-Python discipline as
 final plans.  A lint failure raises inside the micro-batch and fails

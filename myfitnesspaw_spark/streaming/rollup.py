@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from myfitnesspaw_spark.functions.numeric import money_cents
-from myfitnesspaw_spark.streaming.lint_hook import lint_batch_plan
+from myfitnesspaw_spark.streaming.merge import drain
 
 
 def stream_table_source(
@@ -184,9 +184,8 @@ def stream_session(spark: SparkSession) -> SparkSession:
     and nanosAsLong on.  A stateful query freezes its state-partition
     count from the session its DataFrame was built in, so building a
     stream here sizes its state without changing any conf another
-    caller of ``spark`` reads.  A memory sink's view lives in the
-    session that started the query: read it as
-    ``df.sparkSession.table(sink)``.
+    caller of ``spark`` reads.  ``streaming/merge.py:drain`` runs the
+    stream and its merges in that same session.
     """
     child = spark.newSession()
     child.conf.set(
@@ -254,7 +253,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _drain_update_merge(
     agg: DataFrame,
     key_cols: list[str],
-    state_view: str,
     sink_name: str,
     multi_batch_exact: bool = True,
 ) -> DataFrame:
@@ -283,48 +281,15 @@ def _drain_update_merge(
     (continuous-operation) watermark passes ``multi_batch_exact=False``
     and gets the RuntimeWarning on a >1-batch drain instead.
     """
-    spark = agg.sparkSession
-    # GLOBAL temp view: foreachBatch executes on a micro-batch session
-    # clone, whose local temp views are invisible to the outer session.
-    # Seed it with an EMPTY frame of the aggregate's schema so a
-    # zero-row stream (no micro-batch ever fires _merge) still returns
-    # an empty DataFrame instead of raising TABLE_OR_VIEW_NOT_FOUND.
-    spark.createDataFrame([], agg.schema).createOrReplaceGlobalTempView(state_view)
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        state = s.table(f"global_temp.{state_view}")
-        merged = state.join(
+    return drain(
+        agg,
+        sink_name,
+        "update",
+        merge=lambda state, batch: state.join(
             batch.select(key_cols), key_cols, "left_anti"
-        ).unionByName(batch)
-        lint_batch_plan(sink_name, merged)
-        merged.localCheckpoint().createOrReplaceGlobalTempView(state_view)
-
-    query = (
-        agg.writeStream.foreachBatch(_merge)
-        .queryName(sink_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        ).unionByName(batch),
+        multi_batch_exact=multi_batch_exact,
     )
-    query.awaitTermination()
-    if not multi_batch_exact and len(query.recentProgress) > 1:
-        import warnings
-
-        warnings.warn(
-            f"{sink_name}: availableNow drain took {len(query.recentProgress)} "
-            "micro-batches; update-mode results may drop rows arriving behind "
-            "the advancing watermark and diverge from a batch oracle",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # Pin ONE final checkpoint for the returned result, then drop the
-    # view: the per-batch intermediate checkpoints become unreferenced
-    # and ContextCleaner can reclaim their storage — repeated bench
-    # runs otherwise accumulate pinned RDD blocks (ADVICE r3).
-    result = spark.table(f"global_temp.{state_view}").localCheckpoint(eager=True)
-    spark.sql(f"DROP VIEW IF EXISTS global_temp.{state_view}")
-    return result
 
 
 def streaming_hourly_rollup(
@@ -365,7 +330,6 @@ def streaming_hourly_rollup(
     state = _drain_update_merge(
         agg,
         ["win", "event_type"],
-        f"{sink_name}_state",
         sink_name,
         multi_batch_exact=drain_watermark is not None,
     )
@@ -407,7 +371,6 @@ def streaming_sliding_rollup(
     state = _drain_update_merge(
         agg,
         ["win", "event_type"],
-        f"{sink_name}_state",
         sink_name,
         multi_batch_exact=drain_watermark is not None,
     )
@@ -437,8 +400,9 @@ def streaming_dedup_counts(
     should hold itself to.  The watermark bounds dedup state to one
     hour of keys.
 
-    This one deliberately KEEPS the complete-mode memory sink the two
-    windowed rollups dropped: its aggregate key is ``event_type`` — a
+    This one deliberately KEEPS the complete-mode drain (each trigger's
+    emission replaces the result) the two windowed rollups dropped: its
+    aggregate key is ``event_type`` — a
     handful of rows at any data scale, so complete-mode re-emission is
     O(types), not O(history) — and chaining two stateful operators
     (dropDuplicates → agg) restricts which output modes Spark accepts.
@@ -457,15 +421,7 @@ def streaming_dedup_counts(
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_user_minutes"))
     )
-    query = (
-        dedup.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return dedup.sparkSession.table(sink_name)
+    return drain(dedup, sink_name, "complete", merge=lambda _, batch: batch)
 
 
 def streaming_static_enrich(
@@ -507,7 +463,6 @@ def streaming_static_enrich(
     return _drain_update_merge(
         agg,
         ["c_mktsegment", "event_type"],
-        f"{sink_name}_state",
         sink_name,
         multi_batch_exact=True,
     )
@@ -547,7 +502,6 @@ def streaming_dedup_within_watermark_counts(
     return _drain_update_merge(
         dedup,
         ["event_type"],
-        f"{sink_name}_state",
         sink_name,
         multi_batch_exact=True,
     )
@@ -629,7 +583,6 @@ def streaming_lsh_ingest_probe(
     return _drain_update_merge(
         agg,
         ["doc_id"],
-        f"{sink_name}_state",
         sink_name,
         multi_batch_exact=True,
     )

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from myfitnesspaw_spark.functions.numeric import epoch_us, money_cents, ntz_from_us
+from myfitnesspaw_spark.streaming.merge import drain
 
 DEFAULT_GAP_MIN = 30
 
@@ -186,16 +187,8 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return events_stream.sparkSession.table(sink_name).select(
+    return drain(sessions, sink_name).select(
         "user_id",
         "n_events",
         F.date_format(ntz_from_us(F.col("start_us")), fmt).alias("start_ts"),

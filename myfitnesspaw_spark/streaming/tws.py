@@ -213,9 +213,4 @@ def tws_user_type_rollup(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    return _drain_update_merge(
-        rolled,
-        ["user_id", "event_type"],
-        state_view="tws_user_type_rollup_state",
-        sink_name=sink_name,
-    )
+    return _drain_update_merge(rolled, ["user_id", "event_type"], sink_name)

@@ -117,13 +117,15 @@ def _lint_inner_batch_plan(sink_name: str, df) -> None:
     final-plan standard; BNLJ is exempt — inner frames join
     micro-batch-bounded state, and the per-query audit that backs the
     final-plan allowlist has no equivalent for anonymous inner plans.
-    Scoping re-confirmed r15 (VERDICT r13 #6 / r14 #8; no streaming
-    source changed since the r13-audited tree): every ``foreachBatch``
-    body still joins state-vs-micro-batch on equi-keys only
-    (streaming/merge.py unionByName; streaming/rollup.py left_anti on
-    key_cols / equi band-store probe) — no join between two unbounded
-    non-state sides exists, so no BNLJ arm is needed here yet; extend
-    with a named allowlist the round one appears."""
+    Every stream drains through ``streaming/merge.py:drain``, so each
+    merge body passed to it is checked here: the append default and
+    the complete-mode keep-last (``unionByName`` / the batch itself),
+    the keyed upsert (``upsert_keep_latest`` over ``unionByName``), the
+    update-mode keep-latest (streaming/rollup.py left_anti on
+    key_cols; the band-store probe is an equi-join upstream) and the
+    additive CMS counts (``unionByName`` + ``groupBy``).  None joins
+    two unbounded non-state sides, so no BNLJ arm is needed here yet;
+    extend with a named allowlist the round one appears."""
     plan = _plan_text(df)
     assert "CartesianProduct" not in plan, (
         f"{sink_name}: CartesianProduct inside a foreachBatch merge plan"

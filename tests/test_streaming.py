@@ -37,30 +37,49 @@ def test_stateful_stream_matches_batch_closed_sessions(spark, sf_dir):
     assert got == expected
 
 
-def test_drain_update_merge_empty_stream(spark, tmp_path):
-    # A zero-row stream never fires a micro-batch; the pre-seeded empty
-    # global view must make the drain return an empty frame instead of
-    # raising TABLE_OR_VIEW_NOT_FOUND (ADVICE r3).
+def _global_temp_views(spark):
+    """Views in ``global_temp``, which every session on the SparkContext
+    shares.  Listed from a fresh session: ``listTables("global_temp")``
+    also lists the asking session's own local temp views."""
+    return spark.newSession().catalog.listTables("global_temp")
+
+
+@pytest.mark.parametrize("shape", ["update", "upsert", "append"])
+def test_drain_update_merge_empty_stream(spark, tmp_path, shape):
+    # A zero-row stream never fires a micro-batch; every merge shape
+    # must return an empty frame with the stream's columns instead of
+    # raising TABLE_OR_VIEW_NOT_FOUND (ADVICE r3), and leave nothing in
+    # the shared global_temp database.
+    import os
+
     import pyspark.sql.functions as F
+    from myfitnesspaw_spark.streaming import merge
     from myfitnesspaw_spark.streaming.rollup import _drain_update_merge
 
+    schema = "ts timestamp, event_type string, value double"
     src = str(tmp_path / "empty_events")
-    spark.createDataFrame(
-        [], "ts timestamp, event_type string, value double"
-    ).write.parquet(src)
-    stream = spark.readStream.schema("ts timestamp, event_type string, value double").parquet(src)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    out = _drain_update_merge(agg, ["win", "event_type"], "empty_drain_state", "empty_drain_sink")
+    if shape == "update":
+        spark.createDataFrame([], schema).write.parquet(src)
+    else:
+        os.makedirs(src)  # a source directory with no files at all
+    stream = spark.readStream.schema(schema).parquet(src)
+    if shape == "update":
+        agg = (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+        )
+        out = _drain_update_merge(agg, ["win", "event_type"], "empty_drain_sink")
+        columns = ["win", "event_type", "n_events"]
+    elif shape == "upsert":
+        out = merge.stream_upsert_latest(stream, ["event_type"], "ts")
+        columns = stream.columns
+    else:
+        out = merge.drain(stream, "empty_append_sink")
+        columns = stream.columns
     assert out.count() == 0
-    assert set(out.columns) == {"win", "event_type", "n_events"}
-    # The drain must clean up its global temp view after materializing.
-    assert not any(
-        t.name == "empty_drain_state" for t in spark.catalog.listTables("global_temp")
-    )
+    assert out.columns == columns
+    assert _global_temp_views(spark) == []
 
 
 def _multibatch_fixture(spark, tmp_path, name):
@@ -107,7 +126,7 @@ def test_drain_update_merge_multibatch_is_oracle_exact(spark, tmp_path):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         out = _drain_update_merge(
-            agg, ["win", "event_type"], "mb_exact_state", "mb_exact_sink",
+            agg, ["win", "event_type"], "mb_exact_sink",
             multi_batch_exact=True,
         )
         got = sorted(
@@ -143,7 +162,7 @@ def test_drain_update_merge_warns_on_multibatch_tight_watermark(spark, tmp_path)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         out = _drain_update_merge(
-            agg, ["win", "event_type"], "multibatch_state", "multibatch_sink",
+            agg, ["win", "event_type"], "multibatch_sink",
             multi_batch_exact=False,
         )
         out.count()
@@ -303,7 +322,7 @@ def test_dedup_within_watermark_multibatch_equals_batch_distinct(spark, tmp_path
         .agg(F.count(F.lit(1)).alias("n"))
     )
     out = _drain_update_merge(
-        dedup, ["event_type"], "ww_dedup_state", "ww_dedup_sink",
+        dedup, ["event_type"], "ww_dedup_sink",
         multi_batch_exact=True,
     )
     got = sorted((r["event_type"], r["n"]) for r in out.collect())
@@ -339,7 +358,7 @@ def test_stream_static_join_multibatch_equals_batch(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
     )
     out = _drain_update_merge(
-        agg, ["segment", "event_type"], "ss_enrich_state", "ss_enrich_sink",
+        agg, ["segment", "event_type"], "ss_enrich_sink",
         multi_batch_exact=True,
     )
     got = sorted((r["segment"], r["event_type"], r["n"], r["v"]) for r in out.collect())
@@ -462,15 +481,18 @@ def test_tws_v2_plan_construction_with_mocked_gate(spark, sf_dir, monkeypatch):
     assert got == baseline
 
 
-def test_inner_batch_plan_lint_hook(spark, tmp_path):
-    """The lint_hook seam (VERDICT r12 #8): foreachBatch merge bodies
-    hand every micro-batch plan to the installed hook; the default is
-    a no-op, and a raising hook fails the streaming drain (so the
-    oracle sweep's inner-plan lint cannot be silently bypassed)."""
+def test_inner_batch_plan_lint_hook(spark, sf_dir, tmp_path):
+    """The lint_hook seam (VERDICT r12 #8): every drain hands each
+    merged micro-batch plan to the installed hook; the default is a
+    no-op, and a raising hook fails the streaming drain (so the
+    oracle sweep's inner-plan lint cannot be silently bypassed).  An
+    append-mode drain such as the stream-stream join reaches the hook
+    too."""
     import pyspark.sql.functions as F
     import pytest as _pytest
 
     from myfitnesspaw_spark.streaming import lint_hook
+    from myfitnesspaw_spark.streaming.joins import stream_stream_click_error
     from myfitnesspaw_spark.streaming.rollup import _drain_update_merge
 
     assert lint_hook.BATCH_PLAN_LINT is None  # production default: no-op
@@ -494,11 +516,14 @@ def test_inner_batch_plan_lint_hook(spark, tmp_path):
     lint_hook.BATCH_PLAN_LINT = lambda n, df: calls.append((n, len(df.columns)))
     try:
         out = _drain_update_merge(
-            _make_agg("hook_ok"), ["win", "event_type"],
-            "hook_ok_state", "hook_ok_sink",
+            _make_agg("hook_ok"), ["win", "event_type"], "hook_ok_sink",
         )
         assert out.count() == 1
         assert calls and all(n == "hook_ok_sink" for n, _ in calls)
+
+        calls.clear()
+        stream_stream_click_error(spark, sf_dir).count()
+        assert calls and all(n == "stream_stream_click_error_sink" for n, _ in calls)
 
         def _boom(name, df):
             raise AssertionError(f"lint rejected {name}")
@@ -506,13 +531,10 @@ def test_inner_batch_plan_lint_hook(spark, tmp_path):
         lint_hook.BATCH_PLAN_LINT = _boom
         with _pytest.raises(Exception, match="lint rejected"):
             _drain_update_merge(
-                _make_agg("hook_boom"), ["win", "event_type"],
-                "hook_boom_state", "hook_boom_sink",
+                _make_agg("hook_boom"), ["win", "event_type"], "hook_boom_sink",
             )
     finally:
         lint_hook.BATCH_PLAN_LINT = None
-        spark.sql("DROP VIEW IF EXISTS global_temp.hook_boom_state")
-        spark.sql("DROP VIEW IF EXISTS global_temp.hook_ok_state")
 
 
 def test_stream_table_source_reads_both_physical_layouts(spark, sf_dir, tmp_path):
@@ -844,8 +866,11 @@ def caller_conf(spark):
 def test_streaming_rollup_never_changes_the_callers_conf(spark, sf_dir, duck, caller_conf):
     """A stream runs in its own child session: a second thread polling
     the caller's conf during a rollup sees only the caller's values,
-    and the rollup still renders UTC wall clocks (oracle match)."""
+    the rollup still renders UTC wall clocks (oracle match), and the
+    caller's session is still the active one afterwards."""
     import threading
+
+    from pyspark.sql import SparkSession
 
     from tests.conftest import assert_matches_oracle
     from myfitnesspaw_spark.plans.stream_queries import STREAMING_ROLLUP_ORACLE
@@ -873,6 +898,52 @@ def test_streaming_rollup_never_changes_the_callers_conf(spark, sf_dir, duck, ca
         poller.join(timeout=30)
     assert not poller.is_alive()
     assert seen == {("7", "America/New_York")}
+    assert SparkSession.getActiveSession() is spark
+    assert SparkSession.active().conf.get("spark.sql.session.timeZone") == "America/New_York"
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_cms_heavy_hitters", "streaming_hourly_rollup"]
+)
+def test_concurrent_runs_of_one_stream_keep_apart(spark, sf_dir, duck, name):
+    """Two threads running the same streaming query on one session
+    each drain into their own result: every run matches its oracle,
+    and nothing is left in the shared ``global_temp`` database."""
+    import sys
+    import threading
+
+    from myfitnesspaw_spark.plans import registry
+    from tests.conftest import assert_matches_oracle
+
+    query, oracle = registry.queries()[name], registry.oracle_sql()[name]
+    trials = 3
+    gate = threading.Barrier(2)
+    results, errors = [], []
+
+    def client():
+        for _ in range(trials):
+            try:
+                gate.wait(timeout=120)
+                results.append(query(spark, sf_dir))
+            except Exception as exc:  # noqa: BLE001 - reported below
+                errors.append(exc)
+
+    threads = [threading.Thread(target=client) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(results) == 2 * trials
+    for df in results:
+        assert_matches_oracle(df, duck, oracle)
+    assert _global_temp_views(spark) == []
 
 
 def test_events_stream_state_partitions_follow_the_knob(spark, sf_dir, tmp_path, caller_conf):
