@@ -134,10 +134,10 @@ def minhash_hashes(shingle_col: Column) -> Column:
     return F.transform(shingle_col, lambda s: F.md5(s))
 
 
-def minhash_signature(hash_arr_col: Column, num_hashes: int) -> list[Column]:
-    """MinHash signature from a materialized per-shingle md5 array:
-    seed *i* is the lexicographic min over the doc's digests under a
-    cyclic rotation by ``2i`` hex chars.
+def minhash_signature(hash_arr: str, num_hashes: int) -> list[Column]:
+    """MinHash signature from the materialized per-shingle md5 array
+    column named ``hash_arr``: seed *i* is the lexicographic min over
+    the doc's digests under a cyclic rotation by ``2i`` hex chars.
 
     One digest, many hash functions (Broder's trick): the leading two
     hex chars of rotation *i* are digest byte *i* — independent random
@@ -151,19 +151,21 @@ def minhash_signature(hash_arr_col: Column, num_hashes: int) -> list[Column]:
     N-wide ``aggregate``+``zip_with`` fold 3.5× at sf0.1 (1.18s vs
     4.19s): higher-order lambdas are interpreted, and the fold
     allocates an N-array accumulator per element while the per-seed
-    pass does one cheap rotation compare."""
+    pass does one cheap rotation compare.
 
-    def rot(h: Column, off: int) -> Column:
+    Each column is parsed from SQL text (one py4j call) rather than
+    assembled from a dozen-plus Column calls: building the lazy
+    ``minhash_signatures`` frame fell from ~200 to ~100 ms (4 cores)."""
+
+    def rot(off: int) -> str:
         if off == 0:
-            return h
-        return F.concat(h.substr(F.lit(off + 1), F.lit(32)), h.substr(F.lit(1), F.lit(off)))
+            return "x"
+        return f"concat(substring(x, {off + 1}, 32), substring(x, 1, {off}))"
 
-    def rot_min(off: int) -> Column:
-        # single-param lambda: a two-param lambda (e.g. `lambda h, i=i`)
-        # would be bound by transform as (element, index).
-        return F.array_min(F.transform(hash_arr_col, lambda h: rot(h, off)))
-
-    return [rot_min(2 * i).alias(f"h{i}") for i in range(num_hashes)]
+    return [
+        F.expr(f"array_min(transform(`{hash_arr}`, x -> {rot(2 * i)})) AS h{i}")
+        for i in range(num_hashes)
+    ]
 
 
 def simhash_bit(token_col: Column, bit: int) -> Column:

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from myfitnesspaw_spark.session import create_frame
+
 SCALE = 1_000_000
 
 
@@ -68,7 +70,8 @@ def assign_clusters(
     and reused for every round."""
     spark = df.sparkSession
     cents = sorted(centroids)
-    cents_df = spark.createDataFrame(
+    cents_df = create_frame(
+        spark,
         [([list(map(int, v)) for _, v in cents], [int(cid) for cid, _ in cents])],
         "__cvecs array<array<bigint>>, __cids array<bigint>",
     )

@@ -6,7 +6,9 @@ the operators a 100 TB training-data pipeline needs: exact hashing,
 n-gram Jaccard via an inverted shingle index, banded MinHash LSH, and
 banded SimHash.  All are pure DataFrame compositions — shuffles land on
 content-hash keys (uniformly distributed, skew-free by construction),
-small sides broadcast, nothing collects to the driver.
+small sides broadcast.  The one collect to the driver is
+``connected_components``' edge list, and only up to
+``CC_DRIVER_MAX_EDGES`` (1M) edges; a larger graph stays in Spark.
 
 Scale shapes:
 
@@ -28,8 +30,11 @@ from __future__ import annotations
 
 import warnings
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from myfitnesspaw_spark.checkpoints import materialize_instance_sized
 from myfitnesspaw_spark.functions.text import (
@@ -40,8 +45,20 @@ from myfitnesspaw_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from myfitnesspaw_spark.session import create_frame
 
 SIMHASH_BITS = 32
+
+#: ``connected_components`` labels a graph of at most this many edges on
+#: the driver.  Measured on a 4-core host (best of 3, driver path vs
+#: Spark rounds): 16-id blocks of random edges (9 hash-min rounds) took
+#: 1.3 vs 8.0 s at 0.23M edges, 3.9 vs 16.8 s at 0.94M, 8.4 vs 30.4 s
+#: at 1.9M; 8-leaf stars (2 rounds) 0.9 vs 2.9 s at 0.25M, 3.8 vs
+#: 4.7 s at 1M and 7.0 vs 6.8 s at 2M.  The bound is the largest size
+#: where the driver won on both shapes; there the Python process peaked
+#: at ~270 MB and the JVM at ~2.4-2.9 GB (the Spark rounds: 4.6-7.8 GB).  Above ~1M nodes the cost is the returned LocalRelation
+#: (built and scanned on the driver), not the numpy labeling.
+CC_DRIVER_MAX_EDGES = 1_000_000
 
 
 def exact_dedup_keep_min(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -505,9 +522,15 @@ def minhash_signatures(
     sh = toks.select(
         F.col(id_col),
         F.array_distinct(word_shingles(F.col("__toks"), shingle_n)).alias("sh"),
-    ).where(F.size("sh") > 0)
+    )
     if checkpoint:
         sh = materialize_instance_sized(sh)
+    # The empty-set filter goes AFTER the barrier: above an unmaterialized
+    # projection Catalyst pushes it below the caller's round-robin
+    # Exchange (``scatter``), where it inlines the whole shingle
+    # expression into the scan stage — shingling ran twice, the first
+    # time in the scan's single task.
+    sh = sh.where("size(sh) > 0")
     carry = ["sh"] if carry_shingles else []
     # Generate barrier so the per-shingle md5 runs once, not once per
     # seed (CollapseProject would re-inline a projected array into all
@@ -517,9 +540,7 @@ def minhash_signatures(
         *carry,
         F.explode(F.array(minhash_hashes(F.col("sh")))).alias("__hs"),
     )
-    sig = hashed.select(
-        F.col(id_col), *carry, *minhash_signature(F.col("__hs"), num_hashes)
-    )
+    sig = hashed.select(F.col(id_col), *carry, *minhash_signature("__hs", num_hashes))
     return sh, sig
 
 
@@ -535,24 +556,16 @@ def minhash_band_table(
     signature store): signatures are computed once per doc at ingest,
     and a later batch probes the stored bands without re-shingling or
     re-signing the corpus.  Row-local explode — no shuffle; the band
-    count is num_hashes/band_rows per doc."""
-    num_bands = num_hashes // band_rows
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|", *[F.col(f"h{b * band_rows + r}") for r in range(band_rows)]
-                        ).alias("key"),
-                    )
-                    for b in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "bk.band", "bk.key")
+    count is num_hashes/band_rows per doc.  Built as SQL text in one
+    projection (``inline`` unpacks the band structs): one py4j call and
+    one analysis instead of several per band."""
+    bands = ", ".join(
+        "named_struct('band', {}, 'key', concat_ws('|', {}))".format(
+            b, ", ".join(f"h{b * band_rows + r}" for r in range(band_rows))
+        )
+        for b in range(num_hashes // band_rows)
+    )
+    return sig.selectExpr(f"`{id_col}`", f"inline(array({bands}))")
 
 
 def minhash_band_candidates(
@@ -620,12 +633,30 @@ def minhash_band_candidates(
             canonical_cell_pred()
         )
     else:
-        left = bands.select(F.col(id_col).alias("id_a"), "band", "key")
-        right = bands.select(F.col(id_col).alias("id_b"), "band", "key")
+        left = bands.selectExpr(f"`{id_col}` AS id_a", "band", "key")
+        right = bands.selectExpr(f"`{id_col}` AS id_b", "band", "key")
         paired = left.join(right, ["band", "key"])
+    # A fixed-count hash repartition (REPARTITION_BY_NUM) ahead of the
+    # distinct: AQE never coalesces it, so the candidate list stays
+    # spread over every core for verification (a plain distinct's
+    # shuffle is coalesced to ONE partition at small scale, and the
+    # per-pair array_intersect then ran in one task).  The aggregate
+    # reuses this partitioning: no exchange is added.  The price: the
+    # distinct's partial aggregate now runs after the exchange, so a
+    # pair colliding in k bands crosses it k times (perfbench corpus:
+    # 108k rows for 16k pairs, 192 vs 121 KB; with 400 identical docs
+    # added, 841k vs 120k rows, 1.07 vs 0.78 MB).  Deduplicating first
+    # does not pay: Spark drops ``distinct().repartition(n, "id_a",
+    # "id_b")``'s repartition (its child is already partitioned that
+    # way) and AQE coalesces the distinct again (hot-band candidates
+    # plus verification, 4 cores: 1.05 -> 2.20 s); repartitioning the
+    # distinct output on ``id_a`` alone shuffles the pairs twice in one
+    # more job, more bytes than the duplicates cost.
+    n = int(sig.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        paired.where(F.col("id_a") < F.col("id_b"))
+        paired.where("id_a < id_b")
         .select("id_a", "id_b")
+        .repartition(n, "id_a", "id_b")
         .distinct()
     )
 
@@ -786,24 +817,37 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     stats: dict | None = None,
+    driver_max_edges: int = CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Connected components over an undirected pair graph — the
     cluster-assignment step after near-dup pair detection (each
-    cluster keeps one canonical doc).
+    cluster keeps one canonical doc).  Returns ``(node, cluster)`` with
+    cluster = min reachable node id.
 
     ``stats`` (optional out-param, same contract as
     ``connected_components_star``): receives ``{"rounds": n}`` — the
     input for rounds-vs-size scaling probes (hash-min converges in
     O(diameter) rounds).
 
-    Hash-min label propagation: every node starts labeled with itself;
-    each iteration joins labels across edges and keeps the minimum;
-    convergence in O(graph diameter) rounds.  Iterative algorithms on
-    Spark need two disciplines, both applied here: ``localCheckpoint``
-    per round (truncates the exponentially-growing lineage) and a
-    cheap scalar convergence probe (a LIMIT-1 anti-check, not a full
-    diff materialization).  Returns ``(node, cluster)`` with cluster =
-    min reachable node id.
+    The edges are materialized once, and their count is observed inside
+    that same job.  A graph of at most ``driver_max_edges`` edges
+    (default :data:`CC_DRIVER_MAX_EDGES`, where the measured crossover
+    lies) with integer ids and no null endpoint is labeled on the
+    driver (:func:`_driver_min_labels`) and returned as a
+    ``LocalRelation``: a Spark round is a join, an aggregate and a
+    checkpoint job, while the numpy passes over the 15k-edge perfbench
+    corpus graph take milliseconds.  ``rounds`` then counts the numpy
+    passes.  The driver path always runs to its fixed point;
+    ``max_iter`` caps only the Spark rounds.  ``driver_max_edges=0``
+    forces the Spark rounds (the rounds-vs-size probe times them).
+
+    Larger graphs run hash-min label propagation in Spark: every node
+    starts labeled with itself; each iteration joins labels across
+    edges and keeps the minimum; convergence in O(graph diameter)
+    rounds.  Iterative algorithms on Spark need two disciplines, both
+    applied here: ``localCheckpoint`` per round (truncates the
+    exponentially-growing lineage) and a cheap scalar convergence probe
+    (a LIMIT-1 anti-check, not a full diff materialization).
 
     r20 optimization: the per-round convergence sum rides the SAME job
     as the round's localCheckpoint via ``observe`` — CollectMetrics
@@ -822,7 +866,12 @@ def connected_components(
     # over an unmaterialized plan executes that plan once per branch —
     # checkpointing the union instead of the edges ran the whole
     # upstream detection twice.
-    edges = edges.localCheckpoint()
+    ob = Observation()
+    edges = edges.observe(ob, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    if ob.get["n"] <= driver_max_edges:
+        labels = _cc_on_driver(edges, id_a, id_b, stats)
+        if labels is not None:
+            return labels
     sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
@@ -858,6 +907,63 @@ def connected_components(
     if stats is not None:
         stats["rounds"] = rounds
     return labels.select("node", F.col("lbl").alias("cluster"))
+
+
+def _cc_on_driver(
+    edges: DataFrame, id_a: str, id_b: str, stats: dict | None
+) -> DataFrame | None:
+    """:func:`connected_components` of the materialized ``edges``,
+    labeled on the driver and returned as a ``LocalRelation`` of the id
+    type; None when the two id columns are not one integer type or an
+    endpoint is null (the Spark rounds handle those)."""
+    ids = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    schema = ids.schema
+    id_type = schema["a"].dataType
+    if not isinstance(id_type, T.IntegralType) or schema["b"].dataType != id_type:
+        return None
+    table = ids.toArrow()
+    if table["a"].null_count or table["b"].null_count:
+        return None
+    nodes, cluster, rounds = _driver_min_labels(table["a"].to_numpy(), table["b"].to_numpy())
+    if stats is not None:
+        stats["rounds"] = rounds
+    arrow_type = table.schema.field("a").type
+    return create_frame(
+        edges.sparkSession,
+        pa.table({"node": pa.array(nodes, arrow_type), "cluster": pa.array(cluster, arrow_type)}),
+        T.StructType([T.StructField("node", id_type), T.StructField("cluster", id_type)]),
+    )
+
+
+def _driver_min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
+    """Min-id component labels of the edges ``a[i]—b[i]``, in numpy:
+    ``(nodes, cluster, passes)`` with ``nodes`` sorted and
+    ``cluster[i]`` the least node connected to ``nodes[i]``.
+
+    Nodes map to dense ranks (``np.unique``, so a smaller rank is a
+    smaller id).  Each pass lowers every label to its neighbours' least
+    label in both edge directions (``np.minimum.at``), then follows
+    labels to their root (pointer jumping, ``lbl = lbl[lbl]``); a label
+    is always a node of the same component with a rank no larger than
+    its own, so the passes end at the component minimum.  The last
+    pass is the one that changes nothing."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a) :]
+    lbl = np.arange(len(nodes))
+    passes = 0
+    while True:
+        passes += 1
+        nxt = lbl.copy()
+        np.minimum.at(nxt, ia, lbl[ib])
+        np.minimum.at(nxt, ib, lbl[ia])
+        while True:
+            jumped = nxt[nxt]
+            if np.array_equal(jumped, nxt):
+                break
+            nxt = jumped
+        if np.array_equal(nxt, lbl):
+            return nodes, nodes[lbl], passes
+        lbl = nxt
 
 
 def connected_components_star(

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from myfitnesspaw_spark.functions import money_cents
 from myfitnesspaw_spark.plans import serving
+from myfitnesspaw_spark.session import create_frame
 from myfitnesspaw_spark.sources import load_table
 
 DATE_FROM = "1997-01-01"
@@ -140,10 +141,10 @@ def _segment_parts(spark: SparkSession, sf_dir: str) -> dict[str | None, DataFra
     segment = table["c_mktsegment"]
     rows = table.select(list(COLUMNS))
     parts = {
-        s: spark.createDataFrame(rows.filter(pc.equal(segment, s)), schema=schema)
+        s: create_frame(spark, rows.filter(pc.equal(segment, s)), schema)
         for s in pc.unique(segment).drop_null().to_pylist()
     }
-    parts[None] = spark.createDataFrame(rows.slice(0, 0), schema=schema)
+    parts[None] = create_frame(spark, rows.slice(0, 0), schema)
     return parts
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from myfitnesspaw_spark.functions.numeric import epoch_us
 from myfitnesspaw_spark.operators.temporal import asof_join_backward
+from myfitnesspaw_spark.session import create_frame
 from myfitnesspaw_spark.sources import load_table
 
 # --- as-of join: each click ↦ most recent prior error of that user --------
@@ -882,9 +883,7 @@ _PRICE_BANDS = [
 
 
 def price_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = spark.createDataFrame(
-        _PRICE_BANDS, "band string, lo double, hi double"
-    )
+    bands = create_frame(spark, _PRICE_BANDS, "band string, lo double, hi double")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
     return (
         part.join(

@@ -28,6 +28,8 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myfitnesspaw_spark.session import create_frame
+
 T = TypeVar("T")
 
 _lock = threading.Lock()
@@ -80,4 +82,4 @@ def snapshot(
 def local(spark: SparkSession, df: DataFrame) -> DataFrame:
     """``df`` collected once and re-registered as a driver-side
     ``LocalRelation`` with the same schema."""
-    return spark.createDataFrame(df.toArrow(), schema=df.schema)
+    return create_frame(spark, df.toArrow(), df.schema)

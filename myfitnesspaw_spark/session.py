@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "myfitnesspaw_spark", cpus: int | None = None) -> SparkSession:
@@ -46,3 +46,23 @@ def get_spark(app_name: str = "myfitnesspaw_spark", cpus: int | None = None) -> 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def create_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """``spark.createDataFrame(data, schema=schema)`` that leaves the
+    thread's active session as it found it.
+
+    ``createDataFrame`` makes ``spark`` the active session (on both the
+    Python class and the JVM thread-local), so a library call on some
+    other session would silently move the caller's."""
+    jcls = SparkSession._get_j_spark_session_class(spark._jvm)
+    prev_py = SparkSession._activeSession
+    prev_j = jcls.getActiveSession()
+    try:
+        return spark.createDataFrame(data, schema=schema)
+    finally:
+        SparkSession._activeSession = prev_py
+        if prev_j.isDefined():
+            jcls.setActiveSession(prev_j.get())
+        else:
+            jcls.clearActiveSession()

@@ -63,8 +63,20 @@ def write_silver(
 
     Partitioning by date (and user at higher cardinality) turns the
     incremental window's predicate into partition pruning.
+
+    The ``rebalance`` hint shuffles rows by the partition columns first,
+    so each table partition is written by one task as one file; without
+    it every task writes a file into every partition it holds rows of
+    (a few hundred KB of silver rows became 179 files per increment).
+    AQE still splits a partition that outgrows its advisory size.
     """
-    df.write.mode(mode).partitionBy(*partition_cols).format("parquet").saveAsTable(table)
+    (
+        df.hint("rebalance", *partition_cols)
+        .write.mode(mode)
+        .partitionBy(*partition_cols)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def write_bucketed(

@@ -1177,6 +1177,10 @@ def rounds_probe(ks: list[int]) -> None:
     size); the healthy signature is flat-to-logarithmic rounds with
     roughly data-proportional per-round time.
 
+    Hash-min runs with ``driver_max_edges=0``: every graph here is
+    small enough for ``connected_components``' driver labeling, whose
+    numpy passes are not the Spark rounds this curve tracks.
+
     Usage: ``python scripts/scale_probe.py rounds [K ...]``
     (default K = 1 2 4 8).
     """
@@ -1205,9 +1209,9 @@ def rounds_probe(ks: list[int]) -> None:
         n_edges = pairs.count()
         st_cc: dict = {}
         t0 = time.perf_counter()
-        connected_components(pairs, stats=st_cc).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        connected_components(pairs, stats=st_cc, driver_max_edges=0).write.format(
+            "noop"
+        ).mode("overwrite").save()
         t_cc = time.perf_counter() - t0
         st_star: dict = {}
         t0 = time.perf_counter()
